@@ -461,10 +461,9 @@ def build_index(
         )
 
     # `background` holds stage writes NOTHING downstream consumes (the
-    # docs table feeds only integrity checks; docstats feeds only query
-    # time) — they run off the critical path and are joined before the
-    # manifest is finalized.
-    pool = ThreadPoolExecutor(max_workers=3)
+    # docs table feeds only integrity checks) — they run off the
+    # critical path and are joined before the manifest is finalized.
+    pool = ThreadPoolExecutor(max_workers=2)
     background = []
     try:
         if src_cached:
@@ -484,25 +483,15 @@ def build_index(
                 lambda: ops_stats.term_frequencies_with_dl(docs_idx, text_col),
             )
 
-        # -- stage docstats (background) ∥ the n_docs/total_tokens
-        # scalars (critical path): both derive from the termfreq parquet
-        # with no mutual dependency (dl is constant within a doc_id
-        # group: max == the value; count/sum over the grouped relation
-        # equal the old docstats-table aggregate exactly)
-        background.append(
-            pool.submit(
-                stage,
-                "docstats",
-                paths.docstats,
-                lambda: termfreq.groupBy("doc_id").agg(F.max("dl").alias("dl")),
-            )
+        # -- stage: docstats (dl is constant within a doc_id group, so
+        # max == the value); the n_docs/total_tokens scalars come from
+        # one count/sum over its small output
+        docstats = stage(
+            "docstats",
+            paths.docstats,
+            lambda: termfreq.groupBy("doc_id").agg(F.max("dl").alias("dl")),
         )
-        n_docs, total_tokens = (
-            termfreq.groupBy("doc_id")
-            .agg(F.max("dl").alias("dl"))
-            .agg(F.count("*"), F.sum("dl"))
-            .collect()[0]
-        )
+        n_docs, total_tokens = docstats.agg(F.count("*"), F.sum("dl")).collect()[0]
         avgdl = float(total_tokens) / n_docs
         manifest["n_docs"] = int(n_docs)
         manifest["total_tokens"] = int(total_tokens)
@@ -571,7 +560,7 @@ def build_index(
             ))
         )
         stage("postings", paths.postings, make_postings)
-        # join every background job (docs/docstats writes, min_idf)
+        # join every background job (docs write, min_idf)
         # before the manifest is finalized — a failure there fails the
         # build here
         for f in background:

@@ -94,3 +94,13 @@ def tf_part(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float, v
     if variant == "plus":
         return (tf * (k1 + 1)) / (k1 * (1 - b + b * dl / avgdl) + tf)
     return (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
+
+
+def topk_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Indices of the top ``min(k, len(ids))`` rows, ordered by score
+    descending, then doc_id descending among ties — the reference's
+    argsort-parity rule (reference src/tfidf_classifier.py:48-49,
+    src/utils.py:209).  The one tie-break rule of the numpy top-k paths:
+    serving, its shard workers and the WAND kernel all select with it."""
+    order = np.lexsort((ids, scores))  # asc score, asc doc_id
+    return order[len(order) - min(k, len(order)) :][::-1]

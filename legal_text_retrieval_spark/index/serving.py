@@ -70,32 +70,18 @@ _SHARD_SERVER: "LocalIndexServer | None" = None
 
 
 def _shard_topk(args):
-    """Worker body: dense accumulation over one census slice, then the
-    slice's top-k by the same (score, doc_id) lexsort rule as
-    ``LocalIndexServer.query``.  Pure numpy over fork-inherited arrays
-    — no py4j, no imports, no writes to shared pages."""
+    """Worker body: score one census slice, then take the slice's top-k
+    by ``codec.topk_order``.  Pure numpy over fork-inherited arrays —
+    no py4j, no imports, no writes to shared pages."""
     s, S, terms, k = args
     srv = _SHARD_SERVER
-    census = srv.all_doc_ids
-    size = len(census)
+    size = len(srv.all_doc_ids)
     lo, hi = s * size // S, (s + 1) * size // S
-    score = np.zeros(hi - lo, dtype=np.float64)
-    matched = np.zeros(hi - lo, dtype=bool)
-    for t, w in terms:  # ascending term order == the engine fold
-        tp = srv.term_post.get(t)
-        if tp is None:
-            continue
-        i0, i1 = np.searchsorted(tp.slots, (lo, hi))
-        sl = tp.slots[i0:i1] - lo
-        score[sl] += w * tp.contribs[i0:i1]
-        matched[sl] = True
-    cand_ids = census[lo:hi][matched]
+    score, matched = srv._score_slice(terms, lo, hi)
+    cand_ids = srv.all_doc_ids[lo:hi][matched]
     cand_ms = score[matched]
-    n = len(cand_ids)
-    if n > k:
-        order = np.lexsort((cand_ids, cand_ms))[-k:]
-        cand_ids, cand_ms = cand_ids[order], cand_ms[order]
-    return n, cand_ids, cand_ms
+    sel = codec.topk_order(cand_ids, cand_ms, k)
+    return len(cand_ids), cand_ids[sel], cand_ms[sel]
 
 
 class LocalIndexServer:
@@ -106,6 +92,8 @@ class LocalIndexServer:
         self.term_idf: dict[str, float] = {}
         self.term_post: dict[str, _TermPostings] = {}
         self.all_doc_ids: np.ndarray | None = None
+        self.has_negative_idf = False
+        self._pool = None
 
     @staticmethod
     def resident_estimate(manifest: dict) -> int:
@@ -229,46 +217,67 @@ class LocalIndexServer:
             )
         return srv
 
+    def _prepare(self, query_text: str) -> tuple[float, list[tuple[str, float]]]:
+        """(qconst, [(term, qtf·idf)]) for one query.  Distinct terms
+        go in ascending order (== term_id order, the dictionary is
+        lexical).  The δ constant folds over ALL of them (an OOV term
+        adds an exact 0.0 at its fold position, like the engine fold);
+        the weighted list keeps only in-vocabulary terms with idf ≠ 0,
+        the ones that can mark a doc matched."""
+        qtf: dict[str, int] = {}
+        for t in ws_split(standardize_data(query_text)):
+            qtf[t] = qtf.get(t, 0) + 1
+        order = sorted(qtf)
+        qconst = 0.0
+        if self.params.variant == "plus":
+            acc = 0.0
+            for t in order:
+                acc += qtf[t] * self.term_idf.get(t, 0.0)
+            qconst = self.params.delta * acc
+        terms = [
+            (t, float(qtf[t]) * self.term_idf[t])
+            for t in order
+            if self.term_idf.get(t, 0.0) != 0.0
+        ]
+        return qconst, terms
+
+    def _score_slice(
+        self, terms: list[tuple[str, float]], lo: int, hi: int
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """(score, matched) over census slots [lo, hi): dense
+        scatter-add where per doc the additions happen in ascending
+        term order (same fold as the WAND kernel → bit-identical
+        scores), each term costing O(postings) instead of an
+        O(n log n) candidate re-sort.  Slot-indexed, so sparse id
+        spaces — chunked corpora at CHUNK_ID_BASE ≈ 1e9 — cost
+        O(n_docs), not O(max_id).  The whole census (``query``) skips
+        the per-term slice search, which would only re-offset a copy
+        of every posting array on the latency-critical path."""
+        whole = lo == 0 and hi == len(self.all_doc_ids)
+        score = np.zeros(hi - lo, dtype=np.float64)
+        matched = np.zeros(hi - lo, dtype=bool)
+        for t, w in terms:
+            tp = self.term_post.get(t)
+            if tp is None:
+                continue
+            if whole:
+                slots, contribs = tp.slots, tp.contribs
+            else:
+                i0, i1 = np.searchsorted(tp.slots, (lo, hi))
+                slots, contribs = tp.slots[i0:i1] - lo, tp.contribs[i0:i1]
+            score[slots] += w * contribs  # doc_ids unique per term
+            matched[slots] = True
+        return score, matched
+
     def query(self, query_text: str, k: int) -> list[tuple[int, float]]:
         """[(doc_id, score)] rank order — identical semantics to
         wand.query_topk (term-ordered accumulation, δ constant,
         argsort-parity ties, δ-padding)."""
-        p = self.params
-        toks = ws_split(standardize_data(query_text))
-        qtf: dict[str, int] = {}
-        for t in toks:
-            qtf[t] = qtf.get(t, 0) + 1
-
-        # δ constant folded in term order (matches the engine fold)
-        qconst = 0.0
-        if p.variant == "plus":
-            acc = 0.0
-            for t in sorted(qtf):
-                acc += qtf[t] * self.term_idf.get(t, 0.0)
-            qconst = p.delta * acc
-
-        # dense scatter-add accumulation: per doc the additions happen
-        # in ascending term order (same fold as the WAND kernel →
-        # bit-identical scores), but each term costs O(postings)
-        # instead of an O(n log n) candidate re-sort.  The accumulator
-        # is slot-indexed (position in the sorted doc-id census) so
-        # sparse id spaces — chunked corpora at CHUNK_ID_BASE ≈ 1e9 —
-        # cost O(n_docs), not O(max_id).
-        size = len(self.all_doc_ids)
-        score = np.zeros(size, dtype=np.float64)
-        matched = np.zeros(size, dtype=bool)
-        for t in sorted(qtf):  # == term_id order (lexical dictionary)
-            tp = self.term_post.get(t)
-            idf = self.term_idf.get(t, 0.0)
-            if tp is None or idf == 0.0:
-                continue
-            w = float(qtf[t]) * idf
-            score[tp.slots] += w * tp.contribs  # doc_ids unique per term
-            matched[tp.slots] = True
+        qconst, terms = self._prepare(query_text)
+        score, matched = self._score_slice(terms, 0, len(self.all_doc_ids))
         cand_ids = self.all_doc_ids[matched]
         cand_ms = score[matched]
 
-        n = len(cand_ids)
         # δ-padding: unmatched docs score exactly qconst, and only the
         # k highest unmatched ids can ever place.  Pads join the
         # candidate pool whenever they could outrank a matched row —
@@ -278,28 +287,19 @@ class LocalIndexServer:
         # pad-query window.  The no-pad fast path ranks on raw ms (the
         # distributed matched window) — adding the constant only after
         # selection, so no tie can be manufactured by the addition.
-        need_pads = n < k or getattr(self, "has_negative_idf", False)
-        if not need_pads:
-            order = np.lexsort((cand_ids, cand_ms))
-            sel = order[-min(k, n):][::-1]
+        if len(cand_ids) >= k and not self.has_negative_idf:
+            sel = codec.topk_order(cand_ids, cand_ms, k)
             return [(int(cand_ids[i]), qconst + float(cand_ms[i])) for i in sel]
 
-        cand_scores = qconst + cand_ms
-        matched_set = set(cand_ids.tolist())
-        pad_ids = []
-        for d in self.all_doc_ids[::-1]:
-            if len(pad_ids) == k:
-                break
-            if int(d) not in matched_set:
-                pad_ids.append(int(d))
-        if pad_ids:
-            cand_ids = np.concatenate([cand_ids, np.array(pad_ids, dtype=np.int64)])
-            cand_scores = np.concatenate(
-                [cand_scores, np.full(len(pad_ids), qconst, dtype=np.float64)]
-            )
-        k_loc = min(k, len(cand_ids))
-        order = np.lexsort((cand_ids, cand_scores))
-        sel = order[-k_loc:][::-1]
+        # the census is sorted, so the k highest unmatched ids are the
+        # tail of the unmatched slots
+        unmatched = self.all_doc_ids[~matched]
+        pad_ids = unmatched[len(unmatched) - min(k, len(unmatched)) :]
+        cand_ids = np.concatenate([cand_ids, pad_ids])
+        cand_scores = np.concatenate(
+            [qconst + cand_ms, np.full(len(pad_ids), qconst, dtype=np.float64)]
+        )
+        sel = codec.topk_order(cand_ids, cand_scores, k)
         return [(int(cand_ids[i]), float(cand_scores[i])) for i in sel]
 
     # ------------------------------------------------------------------
@@ -310,8 +310,9 @@ class LocalIndexServer:
         contiguous slice of the doc-id census.  Fork shares the loaded
         postings copy-on-write (numpy data pages are never written, so
         resident cost stays one index), and each query fans out as
-        slice-local dense accumulation + slice top-k, merged by the
-        SAME lexsort rule as ``query`` — results are bit-identical
+        slice-local dense accumulation (``_score_slice``) + slice
+        top-k, merged by ``codec.topk_order`` like ``query`` — results
+        are bit-identical
         (tests/test_serving.py::test_query_sharded_bit_identical):
         per-doc adds stay in ascending term order inside one shard,
         shards own disjoint doc ids, and the global top-k is a subset
@@ -326,13 +327,13 @@ class LocalIndexServer:
         (tests/test_serving.py::test_one_pool_per_process)."""
         import multiprocessing as mp
 
-        if getattr(self, "_pool", None) is not None:
+        if self._pool is not None:
             raise RuntimeError("workers already started")
         global _SHARD_SERVER
         if (
             _SHARD_SERVER is not None
             and _SHARD_SERVER is not self
-            and getattr(_SHARD_SERVER, "_pool", None) is not None
+            and _SHARD_SERVER._pool is not None
         ):
             raise RuntimeError(
                 "another LocalIndexServer's worker pool is live in this "
@@ -347,10 +348,9 @@ class LocalIndexServer:
 
     def stop_workers(self) -> None:
         global _SHARD_SERVER
-        pool = getattr(self, "_pool", None)
-        if pool is not None:
-            pool.terminate()
-            pool.join()
+        if self._pool is not None:
+            self._pool.terminate()
+            self._pool.join()
             self._pool = None
         if _SHARD_SERVER is self:
             # release the global so the multi-GiB postings arrays are
@@ -369,34 +369,16 @@ class LocalIndexServer:
         the shards' matched counts and served by the sequential path —
         rare at the scales where sharding matters, and bit-identity is
         then trivial."""
-        if getattr(self, "_pool", None) is None:
+        if self._pool is None:
             raise RuntimeError("call start_workers(n) first")
-        p = self.params
-        toks = ws_split(standardize_data(query_text))
-        qtf: dict[str, int] = {}
-        for t in toks:
-            qtf[t] = qtf.get(t, 0) + 1
-        qconst = 0.0
-        if p.variant == "plus":
-            acc = 0.0
-            for t in sorted(qtf):
-                acc += qtf[t] * self.term_idf.get(t, 0.0)
-            qconst = p.delta * acc
-        terms = [
-            (t, float(qtf[t]) * self.term_idf[t])
-            for t in sorted(qtf)
-            if t in self.term_idf and self.term_idf[t] != 0.0
-        ]
-
+        qconst, terms = self._prepare(query_text)
         S = self._n_workers
         parts = self._pool.map(_shard_topk, [(s, S, terms, k) for s in range(S)])
-        n_matched = sum(n for n, _, _ in parts)
-        if n_matched < k or getattr(self, "has_negative_idf", False):
+        if sum(n for n, _, _ in parts) < k or self.has_negative_idf:
             return self.query(query_text, k)
         cand_ids = np.concatenate([ids for _, ids, _ in parts])
         cand_ms = np.concatenate([ms for _, _, ms in parts])
-        order = np.lexsort((cand_ids, cand_ms))
-        sel = order[-min(k, len(cand_ids)):][::-1]
+        sel = codec.topk_order(cand_ids, cand_ms, k)
         return [(int(cand_ids[i]), qconst + float(cand_ms[i])) for i in sel]
 
     def query_parents(self, query_text: str, k: int, sharded: bool = False) -> list[int]:

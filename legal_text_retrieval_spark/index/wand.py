@@ -6,7 +6,8 @@ Plan shape (all-queries-at-once, SURVEY.md §2.4 Q1/Q5):
             → broadcast-join dictionary → (query_id, term_id, qtf, idf)
     postings.filter(term_id ∈ query terms)      ← parquet min/max pruning
             → broadcast-join query terms
-            → groupBy(query_id, seg_id).applyInPandas(WAND kernel)
+            → repartition + sort by (qid, seg_id, term_id)
+            → mapInPandas(streaming WAND kernel, one run per (qid, seg_id))
             → global window top-k merge → + per-query δ-constant
             → δ-padding for queries with < k matched docs
 
@@ -159,11 +160,9 @@ class FulltextIndex:
 def _make_group_fn(
     params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
 ):
-    """The per-(qid, segment) WAND evaluation on raw arrays — shared by
-    the applyInPandas kernel (kept for the property tests) and the
-    streaming mapInPandas kernel, so both are the same math bit for
-    bit.  ``rows`` fields must already be in ascending term_id order
-    (fold order == lexical term order)."""
+    """The per-(qid, segment) WAND evaluation on raw arrays, called by
+    the streaming kernel once per group.  ``rows`` fields must already
+    be in ascending term_id order (fold order == lexical term order)."""
     p = params
     bs = block_size
 
@@ -235,17 +234,15 @@ def _make_group_fn(
             return None
         cand_ids = np.flatnonzero(seen) + base
         cand_scores = scores[seen]
-        k_loc = min(k, n_seen)
-        order = np.lexsort((cand_ids, cand_scores))  # asc score, asc doc_id
-        sel = order[-k_loc:][::-1]  # desc score, desc doc_id among ties
+        sel = codec.topk_order(cand_ids, cand_scores, k)
         return cand_ids[sel], cand_scores[sel], n_seen
 
     return group_topk
 
 
 def _group_arrays(pdf: pd.DataFrame):
-    """Column extraction shared by both kernels (pdf already in
-    ascending term_id order)."""
+    """Column extraction for one group (pdf already in ascending
+    term_id order)."""
     qtf = pdf["qtf"].to_numpy(np.float64)
     idf = pdf["idf"].to_numpy(np.float64)
     segmax = pdf["seg_max_tfpart"].to_numpy(np.float64)
@@ -254,39 +251,15 @@ def _group_arrays(pdf: pd.DataFrame):
     return qtf, idf, segmax, blocks, bufs
 
 
-def _make_kernel(
-    params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
-):
-    """applyInPandas form (one call per (qid, seg_id) group)."""
-    group_topk = _make_group_fn(params, avgdl, window, k, prune, block_size)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = pdf["qid"].iloc[0]
-        seg_id = int(pdf["seg_id"].iloc[0])
-        pdf = pdf.sort_values("term_id")  # fold order == lexical term order
-        res = group_topk(seg_id, *_group_arrays(pdf))
-        if res is None:
-            return pd.DataFrame(
-                {"qid": pd.Series([], dtype=str), "doc_id": [], "ms": [], "n_cand": []}
-            ).astype({"doc_id": "int64", "ms": "float64", "n_cand": "int64"})
-        ids, scores, n_cand = res
-        return pd.DataFrame(
-            {"qid": qid, "doc_id": ids, "ms": scores, "n_cand": np.int64(n_cand)}
-        )
-
-    return kernel
-
-
 def _make_stream_kernel(
     params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
 ):
     """mapInPandas form: the joined relation arrives hash-partitioned
     by (qid, seg_id) and sorted by (qid, seg_id, term_id), so groups
     are contiguous runs; a carry buffer stitches runs spanning Arrow
-    batch boundaries.  Identical math to the applyInPandas kernel (the
-    shared _make_group_fn), but without Spark's per-group overhead —
-    the same streaming-runs trick the posting pack kernel uses
-    (builder._make_pack_fn)."""
+    batch boundaries.  Streaming runs instead of applyInPandas avoids
+    Spark's per-group overhead — the same trick the posting pack
+    kernel uses (builder._make_pack_fn)."""
     group_topk = _make_group_fn(params, avgdl, window, k, prune, block_size)
 
     def kernel(batches):

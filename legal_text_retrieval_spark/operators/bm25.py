@@ -313,8 +313,8 @@ def topk_padded(
     k: int,
 ) -> DataFrame:
     """Top-k of the IMPLICIT full matrix «score(q,d) = matched value,
-    else base(q)» without materializing unmatched pairs — the wand.py
-    δ-padding pattern (index/wand.py:279-301) for relational scorers.
+    else base(q)» without materializing unmatched pairs — the
+    δ-padding branch of index/wand.query_topk, for relational scorers.
 
     - ``matched_scores``: (query_id, doc_id, score), matched pairs only;
     - ``base``: (query_id, base_score) — one row per query, the score

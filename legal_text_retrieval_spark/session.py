@@ -22,11 +22,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    # default: the cores this process may run on (its CPU affinity)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    master = master or f"local[{cores}]"
     if shuffle_partitions is None:
         # local mode: match core count; cluster: set via spark-submit.
         n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 32 if n == "*" else max(8, int(n))
+        shuffle_partitions = max(8, int(cores if n == "*" else n))
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -3,6 +3,7 @@ driver-collect size guard and the okapi negative-ε precondition."""
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -100,3 +101,15 @@ def test_okapi_negative_eps_index_exact(spark, tmp_path):
     want = dense[dense.query_id == 0][["doc_id"]].reset_index(drop=True)
     got_srv = pd.DataFrame(srv.query("aa", 4), columns=["doc_id", "score"])
     assert got_srv["doc_id"].tolist() == want["doc_id"].tolist()
+    # the shard pool hands negative-idf queries to the sequential
+    # (padded) path — bit for bit, including the all-OOV query
+    with srv:
+        srv.start_workers(2)
+        for text in ("aa", "zz oov"):
+            want_q = srv.query(text, 4)
+            got_q = srv.query_sharded(text, 4)
+            assert [d for d, _ in got_q] == [d for d, _ in want_q], text
+            assert (
+                np.array([s for _, s in got_q]).view("int64")
+                == np.array([s for _, s in want_q]).view("int64")
+            ).all(), text

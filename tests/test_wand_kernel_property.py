@@ -1,7 +1,10 @@
 """Hypothesis property test for the block-max WAND kernel in isolation:
 for randomized posting segments and query weights, pruned evaluation
 must equal exhaustive evaluation bit-for-bit (the SURVEY §5.3 safety
-property, without Spark in the loop)."""
+property, without Spark in the loop).  The rows reach the production
+streaming kernel split into two Arrow-style batches at a drawn point,
+so the carry that stitches a group across batches is exercised too:
+the pruned run is split, the exhaustive reference is one batch."""
 
 from __future__ import annotations
 
@@ -12,7 +15,7 @@ from hypothesis import strategies as st
 
 from legal_text_retrieval_spark.config import BM25Params
 from legal_text_retrieval_spark.index import codec
-from legal_text_retrieval_spark.index.wand import _make_kernel
+from legal_text_retrieval_spark.index.wand import _make_stream_kernel
 
 PARAMS = BM25Params(k1=1.2)
 WINDOW = 256
@@ -46,21 +49,30 @@ def _segment_row(rng, term_id, seg_id, n_docs):
     }
 
 
+def _run(pdf, split, k, prune):
+    """The stream kernel over ``pdf`` cut into batches at row ``split``
+    (a cut at either end leaves one batch)."""
+    kernel = _make_stream_kernel(PARAMS, AVGDL, WINDOW, k, prune=prune, block_size=BLOCK)
+    batches = [b.copy() for b in (pdf.iloc[:split], pdf.iloc[split:]) if len(b)]
+    return pd.concat(kernel(iter(batches)), ignore_index=True)
+
+
 @given(
     seed=st.integers(0, 10_000),
     n_terms=st.integers(1, 8),
     k=st.sampled_from([1, 3, 10, 50]),
+    split=st.integers(0, 8),
 )
 @settings(max_examples=150, deadline=None)
-def test_pruned_equals_exhaustive(seed, n_terms, k):
+def test_pruned_equals_exhaustive(seed, n_terms, k, split):
     rng = np.random.default_rng(seed)
     rows = [
         _segment_row(rng, term_id=t, seg_id=5, n_docs=int(rng.integers(1, WINDOW)))
         for t in range(n_terms)
     ]
     pdf = pd.DataFrame(rows)
-    out_prune = _make_kernel(PARAMS, AVGDL, WINDOW, k, prune=True, block_size=BLOCK)(pdf.copy())
-    out_exh = _make_kernel(PARAMS, AVGDL, WINDOW, k, prune=False, block_size=BLOCK)(pdf.copy())
+    out_prune = _run(pdf, split, k, prune=True)
+    out_exh = _run(pdf, 0, k, prune=False)
     assert out_prune["doc_id"].tolist() == out_exh["doc_id"].tolist()
     assert (
         out_prune["ms"].to_numpy().view("int64") == out_exh["ms"].to_numpy().view("int64")
