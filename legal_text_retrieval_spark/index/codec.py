@@ -68,7 +68,7 @@ def decode_varint(buf: bytes) -> np.ndarray:
 def encode_docids(doc_ids: np.ndarray, base: int) -> bytes:
     """Delta-encode strictly-increasing docIDs against ``base`` then
     varint.  First value stores (doc_ids[0] - base); the rest store
-    gaps-1? No — plain gaps (≥1), keeping the codec branch-free."""
+    plain gaps (≥ 1), keeping the codec branch-free."""
     d = np.asarray(doc_ids, dtype=np.int64)
     deltas = np.empty(len(d), dtype=np.int64)
     if len(d):

@@ -148,8 +148,16 @@ class FulltextIndex:
             self._n_terms_cache = int(n) if n is not None else self.dictionary().count()
         return self._n_terms_cache
 
+    _postings_df: DataFrame | None = None
+
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.postings)
+        """The postings relation.  Only the DataFrame handle is kept,
+        not the data, so repeated batches skip read.parquet's one-task
+        schema-inference job; load() refreshes the paths and returns a
+        new instance, so a handle never outlives an open."""
+        if self._postings_df is None:
+            self._postings_df = self.spark.read.parquet(self.paths.postings)
+        return self._postings_df
 
     def docstats(self) -> DataFrame:
         if self._docstats_cache is None:
@@ -172,17 +180,21 @@ def _make_group_fn(
         (doc_ids, scores, n_cand) of the segment-local top-k, or None
         when no candidate survives.
 
-        Dense window-local accumulator (the serving-mode scatter-add
+        Dense span-local accumulator (the serving-mode scatter-add
         trick, index/serving.py): scores/seen are arrays indexed by
-        doc_id − base, so a term merges in O(postings) instead of the
-        previous O(candidates·log) np.unique merge.  Bit-identity is
-        preserved: each (doc, term) contributes exactly one float add,
-        applied in ascending term order — the same adds in the same
-        order as the sorted-merge version (tests/test_wand_kernel_
-        property.py, test_index_engine.py)."""
+        doc_id − base and sized by the group's doc span — base up to
+        the highest ``block_last`` of its rows (each row's block_last
+        is ascending, so its last entry is the row's highest doc id) —
+        not by the segment window, so every per-term pass costs
+        O(docs the segment holds) rather than O(window).  A term merges
+        in O(postings).  Bit-identity is preserved: each (doc, term)
+        contributes exactly one float add, applied in ascending term
+        order (tests/test_wand_kernel_property.py,
+        test_index_engine.py)."""
         base = int(seg_id) * window
-        scores = np.zeros(window, dtype=np.float64)
-        seen = np.zeros(window, dtype=bool)
+        span = max(int(b[1][-1]) for b in blocks) - base + 1
+        scores = np.zeros(span, dtype=np.float64)
+        seen = np.zeros(span, dtype=bool)
         n_seen = 0
         weights = qtf_arr * idf_arr
         seg_ubs = weights * segmax_arr

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from legal_text_retrieval_spark.index import codec
@@ -61,3 +61,25 @@ def test_tf_part_matches_reference_formula(variant):
     else:
         want = ref.get_scores(["a"])
     np.testing.assert_allclose(got, want, rtol=1e-12)
+
+
+@given(
+    n=st.integers(min_value=0, max_value=60),
+    n_levels=st.integers(min_value=1, max_value=4),
+    k_pick=st.sampled_from(["0", "1", "n-1", "n", "n+3", "drawn"]),
+    k_drawn=st.integers(min_value=0, max_value=80),
+    seed=st.integers(min_value=0, max_value=10_000),
+)
+@example(n=0, n_levels=1, k_pick="drawn", k_drawn=5, seed=0)  # empty input
+@settings(max_examples=200, deadline=None)
+def test_topk_order_is_score_desc_then_docid_desc(n, n_levels, k_pick, k_drawn, seed):
+    """The single tie-break rule: scores from 1-4 distinct values force
+    ties, which must resolve by the higher doc_id first."""
+    rng = np.random.default_rng(seed)
+    ids = rng.permutation(rng.choice(2**40, size=n, replace=False)).astype(np.int64)
+    levels = rng.normal(size=n_levels)
+    scores = levels[rng.integers(0, n_levels, size=n)]
+    k = {"0": 0, "1": 1, "n-1": max(n - 1, 0), "n": n, "n+3": n + 3, "drawn": k_drawn}[k_pick]
+    got = codec.topk_order(ids, scores, k)
+    want = sorted(range(n), key=lambda i: (-scores[i], -ids[i]))[:k]
+    assert got.tolist() == want

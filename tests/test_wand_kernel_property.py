@@ -4,7 +4,10 @@ must equal exhaustive evaluation bit-for-bit (the SURVEY §5.3 safety
 property, without Spark in the loop).  The rows reach the production
 streaming kernel split into two Arrow-style batches at a drawn point,
 so the carry that stitches a group across batches is exercised too:
-the pruned run is split, the exhaustive reference is one batch."""
+the pruned run is split, the exhaustive reference is one batch.  A
+second property runs the kernel with a 2^20-doc window over a few
+hundred docs (the accumulator is sized by the docs' span, not the
+window) against an independent per-doc reference."""
 
 from __future__ import annotations
 
@@ -19,13 +22,15 @@ from legal_text_retrieval_spark.index.wand import _make_stream_kernel
 
 PARAMS = BM25Params(k1=1.2)
 WINDOW = 256
+BIG_WINDOW = 1 << 20  # the IndexParams default
 BLOCK = 8
 AVGDL = 37.5
 
 
-def _segment_row(rng, term_id, seg_id, n_docs):
-    base = seg_id * WINDOW
-    ids = base + np.sort(rng.choice(WINDOW, size=n_docs, replace=False)).astype(np.int64)
+def _segment_row(rng, term_id, seg_id, n_docs, window=WINDOW, span=WINDOW):
+    """One posting row of ``n_docs`` docs drawn from [base, base + span)."""
+    base = seg_id * window
+    ids = base + np.sort(rng.choice(span, size=n_docs, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 30, size=n_docs).astype(np.int64)
     dls = rng.integers(1, 120, size=n_docs).astype(np.int64)
     tfp = codec.tf_part(tfs, dls, PARAMS.k1, PARAMS.b, AVGDL, PARAMS.variant)
@@ -49,10 +54,10 @@ def _segment_row(rng, term_id, seg_id, n_docs):
     }
 
 
-def _run(pdf, split, k, prune):
+def _run(pdf, split, k, prune, window=WINDOW):
     """The stream kernel over ``pdf`` cut into batches at row ``split``
     (a cut at either end leaves one batch)."""
-    kernel = _make_stream_kernel(PARAMS, AVGDL, WINDOW, k, prune=prune, block_size=BLOCK)
+    kernel = _make_stream_kernel(PARAMS, AVGDL, window, k, prune=prune, block_size=BLOCK)
     batches = [b.copy() for b in (pdf.iloc[:split], pdf.iloc[split:]) if len(b)]
     return pd.concat(kernel(iter(batches)), ignore_index=True)
 
@@ -83,3 +88,51 @@ def test_pruned_equals_exhaustive(seed, n_terms, k, split):
     if len(out_exh):
         ne, np_ = out_exh["n_cand"].iloc[0], out_prune["n_cand"].iloc[0]
         assert (ne == np_) or (ne >= k and np_ >= k)
+
+
+def _reference_topk(rows, k):
+    """Per doc, 0.0 + Σ w·tf_part added in ascending term order, then the
+    top k by score desc, doc_id desc; also the candidate count."""
+    acc: dict[int, float] = {}
+    for r in sorted(rows, key=lambda r: r["term_id"]):
+        w = r["qtf"] * r["idf"]
+        base = r["seg_id"] * BIG_WINDOW
+        ids = codec.decode_docids(r["doc_ids_enc"], base)
+        tfs = codec.decode_varint(r["tfs_enc"]).astype(np.int64)
+        dls = codec.decode_varint(r["dls_enc"]).astype(np.int64)
+        tfp = codec.tf_part(tfs, dls, PARAMS.k1, PARAMS.b, AVGDL, PARAMS.variant)
+        for d, t in zip(ids.tolist(), tfp.tolist()):
+            acc[d] = acc.get(d, 0.0) + w * t
+    top = sorted(acc, key=lambda d: (-acc[d], -d))[:k]
+    return top, [acc[d] for d in top], len(acc)
+
+
+@given(
+    seed=st.integers(0, 10_000),
+    n_terms=st.integers(1, 8),
+    span=st.integers(1, 300),
+    seg_id=st.sampled_from([0, 3]),
+    k=st.sampled_from([1, 3, 10, 50]),
+    split=st.integers(0, 8),
+)
+@settings(max_examples=150, deadline=None)
+def test_window_larger_than_span_matches_reference(seed, n_terms, span, seg_id, k, split):
+    rng = np.random.default_rng(seed)
+    rows = [
+        _segment_row(
+            rng, t, seg_id, int(rng.integers(1, span + 1)), window=BIG_WINDOW, span=span
+        )
+        for t in range(n_terms)
+    ]
+    want_ids, want_ms, want_cand = _reference_topk(rows, k)
+    want_bits = np.array(want_ms, dtype=np.float64).view("int64").tolist()
+    pdf = pd.DataFrame(rows)
+    for prune in (True, False):
+        out = _run(pdf, split if prune else 0, k, prune, window=BIG_WINDOW)
+        assert out["doc_id"].tolist() == want_ids
+        assert out["ms"].to_numpy().view("int64").tolist() == want_bits
+        n_cand = int(out["n_cand"].iloc[0])
+        if prune:
+            assert n_cand == want_cand or (want_cand >= k and n_cand >= k)
+        else:
+            assert n_cand == want_cand
