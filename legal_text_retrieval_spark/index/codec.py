@@ -96,6 +96,25 @@ def tf_part(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float, v
     return (tf * (k1 + 1)) / (tf + k1 * (1 - b + b * dl / avgdl))
 
 
+def fold_query(params, qtf: dict, idf: dict) -> tuple[float, list]:
+    """(qconst, scoring terms) of one query from its term → qtf counts
+    and the idf of its in-vocabulary terms.  Terms go in ascending order
+    (== term_id order, the dictionary is lexical).  The δ-constant folds
+    qtf·idf over ALL of them (an OOV term adds an exact 0.0 at its fold
+    position, like the relational fold in operators/bm25.py); okapi has
+    none.  The scoring terms are the in-vocabulary ones with idf ≠ 0,
+    the ones that can mark a doc matched.  The one query fold of the
+    numpy paths: serving's ``_prepare`` and ``wand.query_topk``."""
+    order = sorted(qtf)
+    qconst = 0.0
+    if params.variant == "plus":
+        acc = 0.0
+        for t in order:
+            acc += qtf[t] * idf.get(t, 0.0)
+        qconst = params.delta * acc
+    return qconst, [t for t in order if idf.get(t, 0.0) != 0.0]
+
+
 def topk_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
     """Indices of the top ``min(k, len(ids))`` rows, ordered by score
     descending, then doc_id descending among ties — the reference's

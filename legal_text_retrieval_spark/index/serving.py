@@ -218,28 +218,13 @@ class LocalIndexServer:
         return srv
 
     def _prepare(self, query_text: str) -> tuple[float, list[tuple[str, float]]]:
-        """(qconst, [(term, qtf·idf)]) for one query.  Distinct terms
-        go in ascending order (== term_id order, the dictionary is
-        lexical).  The δ constant folds over ALL of them (an OOV term
-        adds an exact 0.0 at its fold position, like the engine fold);
-        the weighted list keeps only in-vocabulary terms with idf ≠ 0,
-        the ones that can mark a doc matched."""
+        """(qconst, [(term, qtf·idf)]) for one query, in ascending term
+        order — the shared fold ``codec.fold_query``."""
         qtf: dict[str, int] = {}
         for t in ws_split(standardize_data(query_text)):
             qtf[t] = qtf.get(t, 0) + 1
-        order = sorted(qtf)
-        qconst = 0.0
-        if self.params.variant == "plus":
-            acc = 0.0
-            for t in order:
-                acc += qtf[t] * self.term_idf.get(t, 0.0)
-            qconst = self.params.delta * acc
-        terms = [
-            (t, float(qtf[t]) * self.term_idf[t])
-            for t in order
-            if self.term_idf.get(t, 0.0) != 0.0
-        ]
-        return qconst, terms
+        qconst, order = codec.fold_query(self.params, qtf, self.term_idf)
+        return qconst, [(t, float(qtf[t]) * self.term_idf[t]) for t in order]
 
     def _score_slice(
         self, terms: list[tuple[str, float]], lo: int, hi: int

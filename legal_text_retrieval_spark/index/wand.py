@@ -3,13 +3,16 @@
 Plan shape (all-queries-at-once, SURVEY.md §2.4 Q1/Q5):
 
     queries → tokenize → (query_id, term, qtf)
-            → broadcast-join dictionary → (query_id, term_id, qtf, idf)
-    postings.filter(term_id ∈ query terms)      ← parquet min/max pruning
-            → broadcast-join query terms
+            → broadcast-join dictionary → ONE driver collect of
+              (qid, query_id, term, qtf, term_id, idf, df)
+    driver:   per-query δ-constant (codec.fold_query), query terms,
+              term_id set, and can-pad (max df of its terms < k)
+    postings.filter(term_id IN (...))           ← parquet min/max pruning
+            → broadcast-join query terms (a local table)
             → repartition + sort by (qid, seg_id, term_id)
             → mapInPandas(streaming WAND kernel, one run per (qid, seg_id))
             → global window top-k merge → + per-query δ-constant
-            → δ-padding for queries with < k matched docs
+            → δ-padding, planned only when some query can pad
 
 The kernel is Arrow-vectorized NumPy; it prunes at block granularity
 using (block_first, block_last, block_max_tfpart) metadata and is
@@ -48,6 +51,15 @@ from .builder import FORMAT_VERSION, IndexPaths
 # max distinct query term_ids pushed down as an .isin literal list
 # (parquet min/max pruning); larger batches use a broadcast semi-join
 TERM_ID_PUSHDOWN_LIMIT = 4096
+
+_QTERMS_SCHEMA = T.StructType(
+    [
+        T.StructField("qid", T.StringType()),
+        T.StructField("term_id", T.LongType()),
+        T.StructField("qtf", T.LongType()),
+        T.StructField("idf", T.DoubleType()),
+    ]
+)
 
 _KERNEL_SCHEMA = T.StructType(
     [
@@ -121,7 +133,6 @@ class FulltextIndex:
 
     _dict_cache: DataFrame | None = None
     _docstats_cache: DataFrame | None = None
-    _n_terms_cache: int | None = None
 
     @staticmethod
     def _pinned(df: DataFrame) -> DataFrame:
@@ -137,16 +148,6 @@ class FulltextIndex:
         if self._dict_cache is None:
             self._dict_cache = self.spark.read.parquet(self.paths.dictionary).cache()
         return self._pinned(self._dict_cache)
-
-    def n_terms(self) -> int:
-        """Vocabulary size, computed once per index lifetime (manifest
-        stats if recorded, else one count over the cached dictionary) —
-        lets repeated query batches skip the per-batch isin-vs-semi-join
-        probe when the whole vocabulary fits the pushdown limit."""
-        if self._n_terms_cache is None:
-            n = self.manifest.get("vocab_size")
-            self._n_terms_cache = int(n) if n is not None else self.dictionary().count()
-        return self._n_terms_cache
 
     _postings_df: DataFrame | None = None
 
@@ -197,15 +198,18 @@ def _make_group_fn(
         seen = np.zeros(span, dtype=bool)
         n_seen = 0
         weights = qtf_arr * idf_arr
-        seg_ubs = weights * segmax_arr
-        rem_ub = float(seg_ubs.sum())
+        # bound of the terms after i: suffix sums clamped at ≥ 0 (a
+        # running subtraction can drift below the true tail)
+        rem_afters = np.maximum(np.cumsum((weights * segmax_arr)[::-1])[::-1], 0.0)
+        rem_afters = np.append(rem_afters[1:], 0.0)
 
         for i in range(len(weights)):
             w = weights[i]
-            rem_after = rem_ub - seg_ubs[i]
-            rem_ub = rem_after
+            rem_after = rem_afters[i]
+            # θ less a 1e-12 relative slack: a block holding a doc that
+            # ties θ is never skipped over a rounding difference
             theta = (
-                float(np.partition(scores[seen], n_seen - k)[n_seen - k])
+                float(np.partition(scores[seen], n_seen - k)[n_seen - k]) * (1 - 1e-12)
                 if prune and n_seen >= k
                 else -np.inf
             )
@@ -332,68 +336,69 @@ def query_topk(
 ) -> DataFrame:
     """(query_id, doc_id, rank, score) — rank-identical to the
     reference scorer (argsort-parity tie-break, δ-padding for queries
-    with fewer than k matching docs)."""
+    with fewer than k matching docs).  A null ``query_text`` has no
+    tokens: under ``plus`` it gets no δ-constant and returns no rows,
+    under ``okapi`` it returns k pad rows at score 0.  An empty or
+    punctuation-only text tokenizes to [''], a one-term query."""
     from ..functions.numeric import round_sql
-    from ..operators.bm25 import query_term_occurrences
+    from ..functions.text import tokenize
 
     spark = index.spark
     params = index.params
     avgdl = index.manifest["avgdl"]
     window = index.manifest["params"]["segment_doc_window"]
 
-    qocc = query_term_occurrences(queries, query_col).withColumn(
-        "qid", F.col("query_id").cast("string")
-    )
-    # ONE broadcast hydration of the query terms: qterms (the candidate
-    # generator) and qconst (the δ-constant) both derive from it, so the
-    # former qmap.distinct() exchange and its left-join back are gone
-    # (guide §2.4).  Every query appears in qocc — tokenize('') is [''],
-    # a 1-token doc — so qconst still covers all-OOV queries.
-    qjoin = qocc.join(
-        F.broadcast(index.dictionary().select("term", "term_id", "idf")), "term", "left"
-    ).fillna({"idf": 0.0})
-    # idf == 0 terms (okapi df == n/2 exactly) contribute nothing but
-    # would mark their postings as "matched" candidates — the relational
-    # plan (and the reference) filters them out (bm25.py: idf != 0), so
-    # the index path must too, or candidacy/deficit/pad sets diverge and
-    # w == 0 invalidates the block-skip bound.
-    qterms = (
-        qjoin.filter(F.col("idf") != 0).select("qid", "term_id", "qtf", "idf")
-    )
-
-    # per-query δ-constant over ALL occurrences, folded in term order
-    # exactly like the relational qconst (bm25.py) — OOV/zero-idf terms
-    # contribute an exact IEEE 0.0 at their fold position, so the sum is
-    # bit-identical to the old in-vocabulary term_id-ordered fold
-    if params.variant == "plus":
-        qconst = (
-            qjoin.groupBy("qid", "query_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("term", (F.col("qtf") * F.col("idf")).alias("v")))
-                ).alias("a")
-            )
-            .select(
-                "qid",
-                "query_id",
-                F.expr(
-                    f"CAST({params.delta!r} AS DOUBLE) * "
-                    "aggregate(a, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x.v)"
-                ).alias("qconst"),
-            )
-        )
-    else:
-        qconst = queries.select(
+    # ONE driver collect prepares the batch: the engine tokenizer runs
+    # in Spark, joined to the cached dictionary, one row per (query,
+    # term); explode_outer keeps a null-text query as one term-less row
+    dict_cols = index.dictionary().select("term", "term_id", "idf", "df")
+    rows = (
+        queries.select(
             F.col("query_id").cast("string").alias("qid"),
             "query_id",
-            F.lit(0.0).alias("qconst"),
+            F.explode_outer(tokenize(F.col(query_col))).alias("term"),
         )
-    # one row per query, referenced by the matched join, the deficit
-    # probe AND the pad branch — cache it so the probe job's
-    # materialization is reused instead of re-aggregating the query
-    # terms in every downstream job (session-lifetime by design, see
-    # CLAUDE.md cache policy / session.query_scope)
-    qconst = qconst.cache()
+        .groupBy("qid", "query_id", "term")
+        .agg(F.count("*").alias("qtf"))
+        .join(F.broadcast(dict_cols), "term", "left")
+        .collect()
+    )
+    by_query: dict = {}
+    for r in rows:
+        terms = by_query.setdefault((r.qid, r.query_id), {})
+        if r.term is not None:
+            terms[r.term] = r
+    qterm_rows, qconst_rows, ids = [], [], set()
+    can_pad = False
+    for (qid, query_id), terms in by_query.items():
+        if not terms and params.variant == "plus":
+            continue  # null text: no δ-constant, so no rows (docstring)
+        # scoring terms leave out idf == 0 (okapi df == n/2) like the
+        # relational plan (bm25.py: idf != 0): they would mark docs
+        # matched, and w == 0 invalidates the block-skip bound
+        idf = {t: r.idf for t, r in terms.items() if r.idf is not None}
+        qconst, order = codec.fold_query(params, {t: r.qtf for t, r in terms.items()}, idf)
+        qconst_rows.append((qid, query_id, qconst))
+        qterm_rows += [(qid, terms[t].term_id, terms[t].qtf, idf[t]) for t in order]
+        ids.update(terms[t].term_id for t in order)
+        # every doc in a scoring term's postings is matched, so a query
+        # with a term of df ≥ k cannot have a deficit
+        can_pad |= max((terms[t].df for t in order), default=0) < k
+    # from pandas, createDataFrame plans a LocalTableScan; a list of
+    # tuples becomes a Python RDD with per-batch broadcasts (CLAUDE.md)
+    qterms = spark.createDataFrame(
+        pd.DataFrame(qterm_rows, columns=["qid", "term_id", "qtf", "idf"]), _QTERMS_SCHEMA
+    )
+    qconst_schema = T.StructType(
+        [
+            _QTERMS_SCHEMA["qid"],
+            queries.schema["query_id"],
+            T.StructField("qconst", T.DoubleType()),
+        ]
+    )
+    qconst = spark.createDataFrame(
+        pd.DataFrame(qconst_rows, columns=qconst_schema.fieldNames()), qconst_schema
+    )
 
     # okapi negative-ε corner (mean idf0 < 0: tiny-vocab/repetitive
     # corpora): WAND's block-max bounds assume non-negative weights
@@ -411,23 +416,13 @@ def query_topk(
             min_idf = index.dictionary().agg(F.min("idf")).collect()[0][0]
         negative_weights = min_idf < 0
 
-    # term_id pruning: an .isin literal list buys parquet row-group
-    # min/max pruning, but collecting an unbounded distinct set to the
-    # driver is a scale hazard — above the guard, switch to a broadcast
-    # LEFT SEMI join (same rows, no driver materialization).  When the
-    # whole VOCABULARY fits the limit (manifest vocab_size, cached per
-    # index — no job after the first call) the query term set trivially
-    # does too, so the limit+1 probe is skipped and the only collect is
-    # the one that builds the literal list itself.
-    if index.n_terms() <= TERM_ID_PUSHDOWN_LIMIT:
-        id_rows = qterms.select("term_id").distinct().collect()
-    else:
-        id_rows = (
-            qterms.select("term_id").distinct().limit(TERM_ID_PUSHDOWN_LIMIT + 1).collect()
-        )
-    if len(id_rows) <= TERM_ID_PUSHDOWN_LIMIT:
+    # term_id pruning: one IN literal list buys parquet row-group
+    # min/max pruning (one SQL string — Column.isin costs a py4j call
+    # per literal); above the guard an unbounded literal list is a scale
+    # hazard, so switch to a broadcast LEFT SEMI join (same rows)
+    if len(ids) <= TERM_ID_PUSHDOWN_LIMIT:
         post = index.postings().where(
-            F.col("term_id").isin([r.term_id for r in id_rows])
+            F.expr(f"term_id IN ({','.join(map(str, sorted(ids)))})") if ids else F.lit(False)
         )
     else:
         post = index.postings().join(
@@ -451,9 +446,7 @@ def query_topk(
     # hash-partition by group key + sort within partitions: groups are
     # contiguous term_id-sorted runs for the streaming kernel — ONE
     # shuffle, no per-group pandas overhead (same layout as the pack
-    # stage).  local top-k rows are tiny (≤ queries × segments × k) —
-    # cache so the merge window, the deficit count and the padding
-    # anti-join reuse one kernel materialization.
+    # stage).  local top-k rows are tiny (≤ queries × segments × k).
     # explicit partition count: the kernel is CPU-heavy per input byte,
     # so AQE's size-based coalescing (which a countless repartition
     # would enable) collapses a small-but-compute-dense batch onto one
@@ -465,8 +458,16 @@ def query_topk(
         joined.repartition(spark_parallelism, "qid", "seg_id")
         .sortWithinPartitions("qid", "seg_id", "term_id")
         .mapInPandas(kernel, _KERNEL_SCHEMA)
-        .cache()
     )
+    # δ-padding is planned only when some query can pad (always with
+    # negative weights: unmatched docs, score qconst, can outrank
+    # matched ones).  Otherwise the plan is just `matched` — no probe
+    # job, bit-identical since the pad branch would be empty.
+    pads_planned = negative_weights or can_pad
+    if pads_planned:
+        # the merge window, the deficit count and the pad anti-join
+        # reuse one kernel materialization
+        local = local.cache()
 
     # per-query relations (qconst, counts, pad_queries) are one row per
     # query — broadcast them explicitly so the planner never sort-merges
@@ -484,6 +485,11 @@ def query_topk(
             (F.col("qconst") + F.col("ms")).alias("score"),
         )
     )
+    if not pads_planned:
+        out = matched.select("query_id", "doc_id", "rank", "score")
+        if score_round is not None:
+            out = out.withColumn("score", F.expr(round_sql("score", score_round)))
+        return out
 
     # matched-doc deficit per query (0 rows or < k candidates → pad).
     # Row count is the right statistic: when the true matched total is
@@ -497,26 +503,8 @@ def query_topk(
         .fillna({"n_matched": 0})
         .withColumn("deficit", F.greatest(F.lit(0), F.lit(k) - F.col("n_matched")))
     )
-
-    # δ-padding is part of the plan unconditionally — when no query has
-    # a deficit the broadcast side is empty and the branch costs ~0
-    # (avoids an extra driver-blocking count() job per query batch).
-    # With negative weights (okapi ε < 0) EVERY query pads, because
-    # unmatched docs (score qconst) can outrank matched ones.
     pad_queries = need if negative_weights else need.filter(F.col("deficit") > 0)
     pad_queries = pad_queries.select("qid", "query_id", "qconst")
-    # short-circuit: one tiny job over the (cached) kernel output
-    # decides whether any query pads.  In the common case (none) the
-    # returned plan is just `matched`, skipping the pad/merge/anti
-    # branch's ~5 sequential stage materializations per action
-    # (negative-weight mode always pads, so it keeps the full plan
-    # without paying the probe).  Bit-identical: with no pad queries,
-    # whole == matched and merged is empty.
-    if not negative_weights and pad_queries.limit(1).count() == 0:
-        out = matched.select("query_id", "doc_id", "rank", "score")
-        if score_round is not None:
-            out = out.withColumn("score", F.expr(round_sql("score", score_round)))
-        return out
     # unmatched docs all score exactly qconst; reference argsort puts
     # higher docIDs first among ties → the k highest unmatched ids are
     # the only pad candidates that can ever appear in the top k.

@@ -33,6 +33,16 @@ def _segment_row(rng, term_id, seg_id, n_docs, window=WINDOW, span=WINDOW):
     ids = base + np.sort(rng.choice(span, size=n_docs, replace=False)).astype(np.int64)
     tfs = rng.integers(1, 30, size=n_docs).astype(np.int64)
     dls = rng.integers(1, 120, size=n_docs).astype(np.int64)
+    qtf = float(rng.integers(1, 3))
+    idf = float(rng.uniform(0.05, 4.0))
+    return _row(term_id, seg_id, ids, tfs, dls, qtf, idf, window)
+
+
+def _row(term_id, seg_id, ids, tfs, dls, qtf, idf, window):
+    """The posting row of docs ``ids`` (ascending, inside the segment)
+    with block metadata at block size BLOCK."""
+    n_docs = len(ids)
+    base = seg_id * window
     tfp = codec.tf_part(tfs, dls, PARAMS.k1, PARAMS.b, AVGDL, PARAMS.variant)
     nb = (n_docs + BLOCK - 1) // BLOCK
     bf = [int(ids[i * BLOCK]) for i in range(nb)]
@@ -42,8 +52,8 @@ def _segment_row(rng, term_id, seg_id, n_docs, window=WINDOW, span=WINDOW):
         "qid": "q",
         "seg_id": seg_id,
         "term_id": term_id,
-        "qtf": float(rng.integers(1, 3)),
-        "idf": float(rng.uniform(0.05, 4.0)),
+        "qtf": qtf,
+        "idf": idf,
         "doc_ids_enc": codec.encode_docids(ids, base),
         "tfs_enc": codec.encode_varint(tfs),
         "dls_enc": codec.encode_varint(dls),
@@ -90,13 +100,13 @@ def test_pruned_equals_exhaustive(seed, n_terms, k, split):
         assert (ne == np_) or (ne >= k and np_ >= k)
 
 
-def _reference_topk(rows, k):
+def _reference_topk(rows, k, window=BIG_WINDOW):
     """Per doc, 0.0 + Σ w·tf_part added in ascending term order, then the
     top k by score desc, doc_id desc; also the candidate count."""
     acc: dict[int, float] = {}
     for r in sorted(rows, key=lambda r: r["term_id"]):
         w = r["qtf"] * r["idf"]
-        base = r["seg_id"] * BIG_WINDOW
+        base = r["seg_id"] * window
         ids = codec.decode_docids(r["doc_ids_enc"], base)
         tfs = codec.decode_varint(r["tfs_enc"]).astype(np.int64)
         dls = codec.decode_varint(r["dls_enc"]).astype(np.int64)
@@ -136,3 +146,42 @@ def test_window_larger_than_span_matches_reference(seed, n_terms, span, seg_id, 
             assert n_cand == want_cand or (want_cand >= k and n_cand >= k)
         else:
             assert n_cand == want_cand
+
+
+# few distinct idfs, so terms often share a weight and docs tie exactly
+TIE_IDFS = [0.1, 0.2, 0.3, 0.7, 1.1]
+
+
+@given(
+    seed=st.integers(0, 10_000),
+    n_terms=st.integers(2, 7),
+    k=st.sampled_from([1, 3, 10, 40]),
+    split=st.integers(0, 8),
+)
+@settings(max_examples=200, deadline=None)
+def test_tied_blocks_at_theta_match_reference(seed, n_terms, k, split):
+    """Every posting has the same tf and dl, so each term gives all its
+    docs one equal contribution and docs tie exactly.  Term t's docs lie
+    in [32t, 32t + 64): later terms reach higher doc ids, which win ties,
+    and blocks past the docs seen so far can be skipped.  A block whose
+    bound ties θ holds a doc that belongs in the top k, so skipping it
+    over a rounding difference in the remaining bound shows here."""
+    rng = np.random.default_rng(seed)
+    tf, dl = int(rng.integers(1, 5)), int(rng.integers(1, 80))
+    rows = []
+    for t in range(n_terms):
+        n = int(rng.integers(1, 65))
+        ids = 5 * WINDOW + 32 * t + np.sort(rng.choice(64, size=n, replace=False))
+        full = np.full(n, 1, dtype=np.int64)
+        qtf = float(rng.integers(1, 3))
+        rows.append(_row(t, 5, ids.astype(np.int64), full * tf, full * dl, qtf,
+                         float(rng.choice(TIE_IDFS)), WINDOW))
+    want_ids, want_ms, want_cand = _reference_topk(rows, k, window=WINDOW)
+    want_bits = np.array(want_ms, dtype=np.float64).view("int64").tolist()
+    pdf = pd.DataFrame(rows)
+    for prune in (True, False):
+        out = _run(pdf, split if prune else 0, k, prune)
+        assert out["doc_id"].tolist() == want_ids
+        assert out["ms"].to_numpy().view("int64").tolist() == want_bits
+        n_cand = int(out["n_cand"].iloc[0])
+        assert n_cand == want_cand or (prune and want_cand >= k and n_cand >= k)
