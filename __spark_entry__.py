@@ -241,7 +241,7 @@ def _q_bm25_compacted_topk(spark, sf_dir):
     ingest that slice through the real Structured Streaming path
     (start_incremental, two micro-batch file drops → appended posting
     generations + snapshot-stats dictionary appends), then restore
-    exactness with compact_merged (the no-build-shuffle merge kernel).
+    exactness with compact_merged (the no-build-shuffle repack kernel).
     The compacted index must equal a fresh build over the full corpus,
     so the oracle is the plain full-corpus BM25 SQL — a stale snapshot
     statistic, an idf=0 placeholder left unfixed, or a dropped
@@ -277,7 +277,7 @@ def _q_bm25_compacted_topk(spark, sf_dir):
                 "overwrite"
             ).parquet(watch)
             q = incremental.start_incremental(
-                spark, watch, root, params,
+                spark, watch, root,
                 checkpoint_dir=f"{base}/ckpt/b{i}",
                 schema=streamed.schema,
             )
@@ -291,7 +291,7 @@ def _q_bm25_compacted_topk(spark, sf_dir):
                     f"streaming micro-batch b{i} did not drain in 600s; "
                     "refusing to compact a partial ingest"
                 )
-        incremental.compact_merged(spark, root, params)
+        incremental.compact_merged(spark, root)
         _CACHE[key] = root
     index = FulltextIndex.load(spark, _CACHE[key])
     return query_topk(index, C.derived_queries(docs), k=_K, score_round=6)

@@ -35,7 +35,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,12 +44,45 @@ from ..functions.ids import DISTRIBUTED_ID_THRESHOLD, assign_dense_ids
 from ..operators import stats as ops_stats
 from . import codec
 
-# Single source of truth for the on-disk index layout version: the
-# builder writes it into every manifest and FulltextIndex/serving
-# require it at load (wand.FulltextIndex.REQUIRED_FORMAT_VERSION is
-# this same constant, so the writer and the readers cannot drift).
-# Bump on any layout change (v3 = min_idf + block-max layout).
+# Single source of truth for the on-disk index layout version: every
+# IndexWriter stamps it and read_manifest requires it, so the writers
+# and the readers cannot drift.  Bump on any layout change (v3 =
+# min_idf + block-max layout).  EPS_FOLD names the okapi ε-floor fold
+# algorithm: indexes built under the round-1 flat term-ordered fold
+# carry no eps_fold key and must be rebuilt, not trusted (the
+# md5-bucketed two-level fold changes ε in the last ulps, so scores
+# and oracle hashes are version-incompatible).
 FORMAT_VERSION = 3
+EPS_FOLD = "md5-bucketed-1024-two-level"
+
+
+def read_manifest(root: str, allow_legacy: bool = False) -> tuple[dict, IndexParams]:
+    """The one manifest reader: (manifest, layout params) of the index
+    at ``root``.  Refuses an index without the current format_version
+    and eps_fold — okapi ε-fold provenance and block-max layout cannot
+    be trusted there — unless ``allow_legacy``, which warns instead."""
+    manifest = json.loads(Path(IndexPaths(root).manifest).read_text())
+    fv = manifest.get("format_version")
+    if fv != FORMAT_VERSION or manifest.get("eps_fold") != EPS_FOLD:
+        msg = (
+            f"index at {root}: format_version={fv!r}, eps_fold="
+            f"{manifest.get('eps_fold', 'MISSING')!r} — expected "
+            f"format_version={FORMAT_VERSION} with eps_fold={EPS_FOLD!r}; "
+            "okapi ε-fold provenance and block-max layout cannot be trusted. "
+            "Rebuild the index, or pass allow_legacy=True to open anyway."
+        )
+        if not allow_legacy:
+            raise ValueError(msg)
+        import warnings
+
+        warnings.warn(msg, stacklevel=3)
+    p = manifest["params"]
+    bm25 = BM25Params(k1=p["k1"], b=p["b"], delta=p["delta"],
+                      variant=p["variant"], epsilon=p["epsilon"])
+    return manifest, IndexParams(block_size=int(p["block_size"]),
+                                 segment_doc_window=int(p["segment_doc_window"]),
+                                 bm25=bm25)
+
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -120,6 +153,96 @@ def input_fingerprint(*parts) -> str:
     ).hexdigest()[:16]
 
 
+class IndexWriter:
+    """The one write scaffold of every index writer — build, merge,
+    delete and compaction: the derived-manifest skeleton, the
+    ``input_fp`` resume guard, the stage runner, the dictionary stage +
+    ``min_idf`` aggregate and the final lineage + manifest write.
+
+    Each stage writes Parquet with _SUCCESS; on resume a completed
+    stage is read back instead of recomputed.  A manifest already in
+    ``out_dir`` with a different ``input_fp`` (None for builds) or
+    different params belongs to another operation, so every stage
+    recomputes; otherwise only its stage timings carry over, never
+    derived stats it would clobber with stale values."""
+
+    def __init__(self, spark: SparkSession, out_dir: str, params: IndexParams,
+                 resume: bool = True, input_fp: str | None = None, **provenance):
+        self.spark = spark
+        self.params = params
+        self.paths = IndexPaths(out_dir)
+        self.resume = resume
+        self.manifest: dict = {
+            "format_version": FORMAT_VERSION,
+            "eps_fold": EPS_FOLD,
+            "params": {**asdict(params.bm25), "block_size": params.block_size,
+                       "segment_doc_window": params.segment_doc_window},
+            "stages": {},
+            **provenance,
+        }
+        if input_fp is not None:
+            self.manifest["input_fp"] = input_fp
+        if resume and Path(self.paths.manifest).exists():
+            old = json.loads(Path(self.paths.manifest).read_text())
+            if (old.get("input_fp"), old.get("params")) == (input_fp, self.manifest["params"]):
+                self.manifest["stages"] = old.get("stages", {})
+            else:
+                self.resume = False
+
+    def set_stats(self, n_docs: int, total_tokens: int) -> float:
+        """Record the corpus scalars; returns avgdl."""
+        avgdl = float(total_tokens) / n_docs
+        self.manifest.update(n_docs=int(n_docs), total_tokens=int(total_tokens), avgdl=avgdl)
+        return avgdl
+
+    def stage(self, name: str, path: str, producer) -> DataFrame:
+        t0 = time.time()
+        stages = self.manifest["stages"]
+        if not (self.resume and _done(path)):
+            producer().write.mode("overwrite").parquet(path)
+            stages[name] = {"path": path, "seconds": round(time.time() - t0, 3), "resumed": False}
+        else:
+            stages.setdefault(name, {"path": path, "seconds": 0.0})["resumed"] = True
+        return self.spark.read.parquet(path)
+
+    def dictionary(self, dfreq) -> DataFrame:
+        """Stage the dictionary of the (term, df) relation ``dfreq()``
+        under the recorded n_docs/total_tokens."""
+        m = self.manifest
+        return self.stage("dictionary", self.paths.dictionary, lambda: dictionary_from_dfreq(
+            dfreq(), m["n_docs"], self.params, m["total_tokens"], self.paths.root))
+
+    def record_min_idf(self, dictionary: DataFrame) -> None:
+        # min_idf < 0 (okapi negative eps floor) invalidates WAND's
+        # block-max bounds — recorded so the query path can refuse loudly
+        self.manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
+
+    def finish(self) -> IndexPaths:
+        write_lineage_and_metrics(self.spark, self.paths, self.manifest, self.resume)
+        return self.paths
+
+
+def remap_term_ids(postings: DataFrame, old_dict: DataFrame, new_dict: DataFrame) -> DataFrame:
+    """Old → new term_id through the term string: term_ids are dense
+    lexical ranks, so any vocabulary change renumbers them."""
+    return (
+        postings.withColumnRenamed("term_id", "term_id_old")
+        .join(old_dict.select(F.col("term_id").alias("term_id_old"), "term"), "term_id_old")
+        .join(new_dict.select("term", "term_id"), "term")
+    )
+
+
+def dfreq_from_postings(postings: DataFrame, old_dict: DataFrame) -> DataFrame:
+    """(term, df) of packed rows keyed by ``old_dict``'s term_ids:
+    df = Σ n_docs over a term's segment rows (docs are disjoint across
+    rows, so this is the term's document frequency)."""
+    return (
+        postings.groupBy("term_id").agg(F.sum("n_docs").alias("df"))
+        .join(old_dict.select("term_id", "term"), "term_id")
+        .select("term", "df")
+    )
+
+
 # vocab size above which term-id assignment switches from a single
 # global window to the distributed range-partition + offset scheme
 DISTRIBUTED_TERMID_THRESHOLD = DISTRIBUTED_ID_THRESHOLD
@@ -184,17 +307,7 @@ def _make_pack_fn(params: IndexParams, avgdl: float):
     per-group frames, no per-group sort — pure numpy slicing."""
 
     def pack(batches) -> "pd.DataFrame":
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
         carry = None  # (term_id, seg_id, doc_ids, tfs, dls) columns of the open run
-
-        def emit(rows):
-            pdf = pd.DataFrame(rows)
-            pdf["build_part"] = pid
-            return pdf
-
         rows = []
 
         def flush_groups(t, s, d, tf, dl, final: bool):
@@ -232,14 +345,112 @@ def _make_pack_fn(params: IndexParams, avgdl: float):
                 dl = np.concatenate([carry[4], dl])
             carry = flush_groups(t, s, d, tf, dl, final=False)
             if len(rows) >= 256:
-                yield emit(rows)
+                yield _emit(rows)
                 rows = []
         if carry is not None:
             flush_groups(*carry, final=True)
         if rows:
-            yield emit(rows)
+            yield _emit(rows)
 
     return pack
+
+
+def _emit(rows: list) -> pd.DataFrame:
+    """Packed-row dicts → a kernel output frame stamped with the
+    producing partition (``build_part``)."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    pdf = pd.DataFrame(rows)
+    pdf["build_part"] = ctx.partitionId() if ctx is not None else -1
+    return pdf
+
+
+def _make_repack_fn(params: IndexParams, avgdl: float, deleted_bc=None):
+    """The one repack kernel: merge, delete and compaction rewrite
+    packed rows only through it.  Rows arrive grouped by contiguous
+    (term_id, seg_id) — merge/compaction range-partition and sort them,
+    a delete's rows are one group each.  Each row is decoded and its
+    deleted doc_ids dropped by one sorted searchsorted membership test;
+    a group's rows are concatenated, doc_id-sorted when there is more
+    than one (a duplicate doc_id is a hard error: sources must cover
+    disjoint docs) and re-packed with maxima against ``avgdl``.  Fully
+    deleted groups emit nothing.  A row's deleted ids are its
+    ``_deleted`` column (DataFrame delete; null = none), the slice of
+    the broadcast sorted array ``deleted_bc`` inside its segment (id-list
+    delete), or none (merge, compaction).  The open group carries across
+    Arrow batch boundaries."""
+    window = params.segment_doc_window
+
+    def pack(key, parts) -> list:
+        if not parts:
+            return []
+        d, tf, dl = (np.concatenate(c) for c in zip(*parts))
+        if len(parts) > 1:
+            order = np.argsort(d, kind="stable")
+            d, tf, dl = d[order], tf[order], dl[order]
+        if len(d) > 1 and not bool(np.all(np.diff(d) > 0)):
+            raise ValueError(
+                f"duplicate doc_id in merged group (term_id={key[0]}, "
+                f"seg_id={key[1]}): source indexes must cover disjoint docs"
+            )
+        return [_pack_group(key[0], key[1], d, tf, dl, params, avgdl)] if len(d) else []
+
+    def kernel(batches):
+        deleted = None if deleted_bc is None else deleted_bc.value
+        key, parts, out = None, [], []
+        for pdf in batches:
+            dels_col = pdf["_deleted"] if "_deleted" in pdf.columns else [None] * len(pdf)
+            for t, s, ids_enc, tfs_enc, dls_enc, dels in zip(
+                pdf["term_id"].to_numpy(np.int64),
+                pdf["seg_id"].to_numpy(np.int64),
+                pdf["doc_ids_enc"],
+                pdf["tfs_enc"],
+                pdf["dls_enc"],
+                dels_col,
+            ):
+                base = int(s) * window
+                d = codec.decode_docids(bytes(ids_enc), base)
+                tf = codec.decode_varint(bytes(tfs_enc)).astype(np.int64)
+                dl = codec.decode_varint(bytes(dls_enc)).astype(np.int64)
+                if deleted is not None:
+                    lo, hi = np.searchsorted(deleted, [base, base + window])
+                    dels = deleted[lo:hi]
+                if dels is not None and len(dels):
+                    dels = np.asarray(dels, dtype=np.int64)
+                    keep = dels[np.minimum(np.searchsorted(dels, d), len(dels) - 1)] != d
+                    d, tf, dl = d[keep], tf[keep], dl[keep]
+                if (int(t), int(s)) != key:
+                    out.extend(pack(key, parts))
+                    key, parts = (int(t), int(s)), []
+                parts.append((d, tf, dl))
+            if len(out) >= 256:
+                yield _emit(out)
+                out = []
+        out.extend(pack(key, parts))
+        if out:
+            yield _emit(out)
+
+    return kernel
+
+
+def range_clustered(rows: DataFrame) -> DataFrame:
+    """Packed rows range-partitioned by (term_id, seg_id) and sorted
+    within partitions: every group is one contiguous run, and the
+    output is term_id-clustered for parquet min/max pruning."""
+    return rows.repartitionByRange(
+        max(1, rows.sparkSession.sparkContext.defaultParallelism), "term_id", "seg_id"
+    ).sortWithinPartitions("term_id", "seg_id")
+
+
+def repack(rows: DataFrame, params: IndexParams, avgdl: float) -> DataFrame:
+    """The merge/compaction plan: range-partition the PRE-kernel packed
+    rows, then run the repack kernel once.  A range partitioner after
+    the kernel would sample its child plan and so run the kernel twice;
+    sampling here re-runs only the map-side remap joins (guide §2.4)."""
+    return range_clustered(
+        rows.select("term_id", "seg_id", "doc_ids_enc", "tfs_enc", "dls_enc")
+    ).mapInPandas(_make_repack_fn(params, avgdl), POSTINGS_SCHEMA)
 
 
 def dictionary_from_dfreq(
@@ -250,9 +461,10 @@ def dictionary_from_dfreq(
     out_dir: str,
 ) -> DataFrame:
     """(term, df) → (term, df, idf, term_id): variant idf (okapi with
-    the md5-bucketed ε-fold) + dense lexical term_id.  Shared by the
-    full build and by index merge (merge recomputes idf from summed
-    df + combined n_docs, so merged == rebuilt bit-for-bit)."""
+    the md5-bucketed ε-fold) + dense lexical term_id.  Every index
+    writer stages its dictionary through it (``IndexWriter.dictionary``):
+    merge, delete and compaction recompute idf from their (term, df)
+    relation + n_docs, so their output == a rebuild bit-for-bit."""
     if params.bm25.variant == "plus":
         idf = dfreq.withColumn("idf", F.expr(f"ln(CAST({n_docs + 1} AS DOUBLE) / df)"))
     else:
@@ -282,7 +494,7 @@ def write_lineage_and_metrics(
 ) -> None:
     """Lineage + metrics over the packed postings table (north_rule:
     postings/sec, bytes, skew ratio, per-partition records) and the
-    final manifest write.  Shared by build and merge."""
+    final manifest write.  ``IndexWriter.finish`` of every writer."""
     postings = spark.read.parquet(paths.postings)
 
     # max_group (largest (term, seg) group) rides along in lineage so
@@ -396,33 +608,8 @@ def build_index(
     sources.corpus.load_corpus for assignment from the Iceberg shape).
     """
     params = params or IndexParams()
-    paths = IndexPaths(out_dir)
-    # format_version bumps on any on-disk layout change; eps_fold names
-    # the okapi ε-floor fold algorithm — indexes built under the round-1
-    # flat term-ordered fold carry no eps_fold key and must be rebuilt,
-    # not trusted (the md5-bucketed two-level fold changes ε in the last
-    # ulps, so scores/oracle hashes are version-incompatible).
-    manifest: dict = {"format_version": FORMAT_VERSION,
-                      "eps_fold": "md5-bucketed-1024-two-level",
-                      "params": {**asdict(params.bm25), "block_size": params.block_size,
-                                 "segment_doc_window": params.segment_doc_window},
-                      "stages": {}}
-    if resume and Path(paths.manifest).exists():
-        manifest.update(json.loads(Path(paths.manifest).read_text()))
-
-    def stage(name: str, path: str, producer) -> DataFrame:
-        t0 = time.time()
-        if not (resume and _done(path)):
-            producer().write.mode("overwrite").parquet(path)
-            manifest["stages"][name] = {
-                "path": path,
-                "seconds": round(time.time() - t0, 3),
-                "resumed": False,
-            }
-        else:
-            manifest["stages"].setdefault(name, {"path": path, "seconds": 0.0})
-            manifest["stages"][name]["resumed"] = True
-        return spark.read.parquet(path)
+    w = IndexWriter(spark, out_dir, params, resume)
+    paths, stage = w.paths, w.stage
 
     # -- ingest parallelism: a handful of big input files must not
     # serialize the tokenize stage; spread to 2× total cores up front.
@@ -492,23 +679,10 @@ def build_index(
             lambda: termfreq.groupBy("doc_id").agg(F.max("dl").alias("dl")),
         )
         n_docs, total_tokens = docstats.agg(F.count("*"), F.sum("dl")).collect()[0]
-        avgdl = float(total_tokens) / n_docs
-        manifest["n_docs"] = int(n_docs)
-        manifest["total_tokens"] = int(total_tokens)
-        manifest["avgdl"] = avgdl
+        avgdl = w.set_stats(n_docs, total_tokens)
 
         # -- stage: dictionary (term → dense term_id in lexical order + df + idf)
-        dictionary = stage(
-            "dictionary",
-            paths.dictionary,
-            lambda: dictionary_from_dfreq(
-                termfreq.groupBy("term").agg(F.count("*").alias("df")),
-                n_docs,
-                params,
-                total_tokens,
-                out_dir,
-            ),
-        )
+        dictionary = w.dictionary(lambda: termfreq.groupBy("term").agg(F.count("*").alias("df")))
         # -- stage: postings (segment-partitioned, packed, block-max metadata)
         # Pack-shuffle partition count scales with posting volume
         # (total_tokens is an exact upper bound on postings — Σ dl is
@@ -550,15 +724,9 @@ def build_index(
                 .mapInPandas(_make_pack_fn(params, avgdl), POSTINGS_SCHEMA)
             )
 
-        # min_idf < 0 (okapi negative eps floor) invalidates WAND's
-        # block-max bounds — recorded so the query path can refuse loudly.
-        # The tiny dictionary aggregate is independent of the pack shuffle,
-        # so it overlaps the postings stage (guide §2.6).
-        background.append(
-            pool.submit(lambda: manifest.__setitem__(
-                "min_idf", float(dictionary.agg(F.min("idf")).collect()[0][0])
-            ))
-        )
+        # the tiny min_idf aggregate is independent of the pack shuffle,
+        # so it overlaps the postings stage (guide §2.6)
+        background.append(pool.submit(w.record_min_idf, dictionary))
         stage("postings", paths.postings, make_postings)
         # join every background job (docs write, min_idf)
         # before the manifest is finalized — a failure there fails the
@@ -570,8 +738,7 @@ def build_index(
 
     # -- lineage + metrics (north_rule: postings/sec, bytes, skew ratio,
     # per-partition records)
-    write_lineage_and_metrics(spark, paths, manifest, resume)
-    return paths
+    return w.finish()
 
 
 def verify_integrity(spark: SparkSession, paths: IndexPaths, source: DataFrame, text_col: str = "content") -> int:

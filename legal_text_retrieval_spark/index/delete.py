@@ -5,15 +5,17 @@ documents and produces an index bit-identical to a fresh build over
 the surviving corpus (tests/test_index_delete.py), without re-running
 the build shuffle:
 
-- **postings**: one pass over the packed rows — decode, mask out
-  deleted doc_ids, re-pack against the NEW avgdl (maxima recompute is
-  mandatory: avgdl moves when docs leave).  Batch deletes (iterable
-  input) broadcast the sorted id array and stay map-only; bulk deletes
-  (DataFrame input, e.g. 10⁸ ids from a dedup sweep) never touch the
-  driver — ids group into per-segment sorted lists merge-joined on
-  seg_id, so per-row state is bounded by segment_doc_window.
-  Surviving doc_ids/deltas are unchanged, so segments re-encode to
-  the bytes a rebuild would produce.
+- **postings**: one pass of the one repack kernel
+  (builder._make_repack_fn — shared with merge and compaction) over
+  the packed rows — decode, mask out deleted doc_ids, re-pack against
+  the NEW avgdl (maxima recompute is mandatory: avgdl moves when docs
+  leave).  Batch deletes (iterable input) broadcast the sorted id
+  array and stay map-only; bulk deletes (DataFrame input, e.g. 10⁸ ids
+  from a dedup sweep) never touch the driver — ids group into
+  per-segment sorted lists merge-joined on seg_id, so per-row state is
+  bounded by segment_doc_window.  Surviving doc_ids/deltas are
+  unchanged, so segments re-encode to the bytes a rebuild would
+  produce.
 - **dictionary**: df is recomputed FROM the filtered packed rows
   (df = Σ n_docs over a term's segments), terms with df=0 drop out,
   and term_ids are reassigned as dense lexical ranks over the
@@ -21,6 +23,8 @@ the build shuffle:
   kernel's per-doc fold order matches a rebuild exactly.  idf (and
   the okapi ε-fold) recompute from the new (term, df) + n_docs.
 - **docs / docstats**: anti-join on the deleted set.
+
+The stages, resume guard and manifest are builder.IndexWriter's.
 
 The reference engine has no deletion at all (its index is a pickled
 in-memory scorer rebuilt from scratch — /root/reference/src/
@@ -31,130 +35,21 @@ need at training-corpus scale.
 
 from __future__ import annotations
 
-import json
-import time
-from pathlib import Path
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import codec
 from .builder import (
     POSTINGS_SCHEMA,
     IndexPaths,
-    _done,
-    _pack_group,
-    dictionary_from_dfreq,
+    IndexWriter,
+    _make_repack_fn,
+    dfreq_from_postings,
     input_fingerprint,
-    write_lineage_and_metrics,
+    range_clustered,
+    read_manifest,
+    remap_term_ids,
 )
-from .merge import _params_from_manifest
-
-
-def _make_delete_fn(params, avgdl: float, deleted_bc):
-    """mapInPandas kernel: each packed row is one (term_id, seg_id)
-    group — decode, drop deleted doc_ids, re-pack with maxima against
-    the post-delete avgdl.  Emits nothing for fully-deleted groups."""
-    window = params.segment_doc_window
-
-    def fn(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        deleted = deleted_bc.value
-        out = []
-
-        def emit():
-            pdf = pd.DataFrame(out)
-            pdf["build_part"] = pid
-            return pdf
-
-        for pdf in batches:
-            for term_id, seg_id, ids_enc, tfs_enc, dls_enc in zip(
-                pdf["term_id"].to_numpy(np.int64),
-                pdf["seg_id"].to_numpy(np.int64),
-                pdf["doc_ids_enc"],
-                pdf["tfs_enc"],
-                pdf["dls_enc"],
-            ):
-                base = int(seg_id) * window
-                d = codec.decode_docids(bytes(ids_enc), base)
-                keep = ~np.isin(d, deleted, assume_unique=False)
-                if not keep.any():
-                    continue
-                t = codec.decode_varint(bytes(tfs_enc)).astype(np.int64)[keep]
-                l = codec.decode_varint(bytes(dls_enc)).astype(np.int64)[keep]
-                out.append(
-                    _pack_group(int(term_id), int(seg_id), d[keep], t, l, params, avgdl)
-                )
-                if len(out) >= 256:
-                    yield emit()
-                    out = []
-        if out:
-            yield emit()
-
-    return fn
-
-
-def _make_delete_join_fn(params, avgdl: float):
-    """Bulk-delete kernel: like ``_make_delete_fn`` but the deleted ids
-    arrive as a per-row ``_deleted`` array column (the packed rows were
-    left-joined to the per-segment deleted-id lists), so no driver
-    collect or broadcast variable is needed — delete sets of any size
-    stay distributed.  A row with ``_deleted`` null belongs to a
-    segment with no deletions; it still re-packs (block maxima depend
-    on the post-delete avgdl)."""
-    window = params.segment_doc_window
-
-    def fn(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        out = []
-
-        def emit():
-            pdf = pd.DataFrame(out)
-            pdf["build_part"] = pid
-            return pdf
-
-        for pdf in batches:
-            for term_id, seg_id, ids_enc, tfs_enc, dls_enc, dels in zip(
-                pdf["term_id"].to_numpy(np.int64),
-                pdf["seg_id"].to_numpy(np.int64),
-                pdf["doc_ids_enc"],
-                pdf["tfs_enc"],
-                pdf["dls_enc"],
-                pdf["_deleted"],
-            ):
-                base = int(seg_id) * window
-                d = codec.decode_docids(bytes(ids_enc), base)
-                if dels is None:
-                    keep = np.ones(len(d), dtype=bool)
-                else:
-                    # sorted by construction (sort_array) → searchsorted
-                    # membership, no per-row np.isin hash build
-                    dels = np.asarray(dels, dtype=np.int64)
-                    pos = np.searchsorted(dels, d)
-                    pos[pos == len(dels)] = 0
-                    keep = dels[pos] != d
-                if not keep.any():
-                    continue
-                t = codec.decode_varint(bytes(tfs_enc)).astype(np.int64)[keep]
-                l = codec.decode_varint(bytes(dls_enc)).astype(np.int64)[keep]
-                out.append(
-                    _pack_group(int(term_id), int(seg_id), d[keep], t, l, params, avgdl)
-                )
-                if len(out) >= 256:
-                    yield emit()
-                    out = []
-        if out:
-            yield emit()
-
-    return fn
 
 
 def delete_docs(
@@ -180,11 +75,10 @@ def delete_docs(
       proportional to index size, no driver materialization anywhere
       in the plan.  The resume fingerprint likewise derives from an
       order-independent distributed digest (count/xxhash-sum/min/max),
-      not the literal id list."""
+      not the literal id list; the cached id set is released on return
+      or failure."""
     src = IndexPaths(root)
-    m = json.loads(Path(src.manifest).read_text())
-    params = _params_from_manifest(m)
-    paths = IndexPaths(out_dir)
+    m, params = read_manifest(root)
 
     bulk = isinstance(doc_ids, DataFrame)
     if bulk:
@@ -194,102 +88,70 @@ def delete_docs(
             .distinct()
             .cache()
         )
-        deleted = None
     else:
         deleted = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         del_df = spark.createDataFrame([(int(x),) for x in deleted], "doc_id bigint")
+    try:
+        # order-independent delete-set digest — same recipe for both
+        # input shapes, so a list delete and the equivalent DataFrame
+        # delete resume each other's artifacts.  TWO independently-
+        # seeded hash sums (ADVICE r5: a single sum of hashes aliases too
+        # easily — two different delete sets colliding on one
+        # commutative sum would wrongly resume each other's artifacts;
+        # aliasing now requires a simultaneous collision on both sums
+        # plus count/min/max)
+        drow = del_df.agg(
+            F.count("*").alias("n"),
+            # decimal(38,0) sums: a BIGINT sum of 64-bit hashes overflows
+            # under ANSI mode; decimal38 holds ~1e38 ≫ 9e18 × 10⁸ ids
+            F.coalesce(F.sum(F.xxhash64("doc_id").cast("decimal(38,0)")), F.lit(0)).alias("h"),
+            F.coalesce(
+                F.sum(F.xxhash64(F.lit("lts-delete-digest-seed2"), F.col("doc_id")).cast("decimal(38,0)")),
+                F.lit(0),
+            ).alias("h2"),
+            F.coalesce(F.min("doc_id"), F.lit(0)).alias("lo"),
+            F.coalesce(F.max("doc_id"), F.lit(0)).alias("hi"),
+        ).collect()[0]
 
-    # order-independent delete-set digest — same recipe for both input
-    # shapes, so a list delete and the equivalent DataFrame delete
-    # resume each other's artifacts.  TWO independently-seeded hash
-    # sums (ADVICE r5: a single sum of hashes aliases too easily —
-    # two different delete sets colliding on one commutative sum would
-    # wrongly resume each other's artifacts; aliasing now requires a
-    # simultaneous collision on both sums plus count/min/max)
-    drow = del_df.agg(
-        F.count("*").alias("n"),
-        # decimal(38,0) sums: a BIGINT sum of 64-bit hashes overflows
-        # under ANSI mode; decimal38 holds ~1e38 ≫ 9e18 × 10⁸ ids
-        F.coalesce(F.sum(F.xxhash64("doc_id").cast("decimal(38,0)")), F.lit(0)).alias("h"),
-        F.coalesce(
-            F.sum(F.xxhash64(F.lit("lts-delete-digest-seed2"), F.col("doc_id")).cast("decimal(38,0)")),
-            F.lit(0),
-        ).alias("h2"),
-        F.coalesce(F.min("doc_id"), F.lit(0)).alias("lo"),
-        F.coalesce(F.max("doc_id"), F.lit(0)).alias("hi"),
-    ).collect()[0]
-    n_del_ids = int(drow.n)
+        ds = spark.read.parquet(src.docstats)
+        # semi-join sizing: a broadcast of a 10⁸-id bulk delete set is
+        # the AQE-broadcast OOM hazard — pin sort-merge there, broadcast
+        # the small batch case
+        sized_del = del_df.hint("merge") if bulk else F.broadcast(del_df)
+        n_dropped, tokens_dropped = (
+            ds.join(sized_del, "doc_id", "left_semi")
+            .agg(F.count("*"), F.coalesce(F.sum("dl"), F.lit(0)))
+            .collect()[0]
+        )
+        n_docs = int(m["n_docs"]) - int(n_dropped)
+        if n_docs <= 0:
+            raise ValueError("deleting every document — refuse to build an empty index")
+        input_fp = input_fingerprint(
+            "delete", root, m.get("n_docs"), m.get("total_tokens"),
+            "digest-v3", int(drow.n), int(drow.h), int(drow.h2), int(drow.lo), int(drow.hi),
+        )
+        w = IndexWriter(spark, out_dir, params, resume, input_fp,
+                        deleted_from=root, n_deleted=int(n_dropped))
+        avgdl = w.set_stats(n_docs, int(m["total_tokens"]) - int(tokens_dropped))
 
-    ds = spark.read.parquet(src.docstats)
-    # semi-join sizing: a broadcast of a 10⁸-id bulk delete set is the
-    # AQE-broadcast OOM hazard — pin sort-merge there, broadcast the
-    # small batch case
-    sized_del = del_df.hint("merge") if bulk else F.broadcast(del_df)
-    dropped = ds.join(sized_del, "doc_id", "left_semi")
-    n_dropped, tokens_dropped = dropped.agg(
-        F.count("*"), F.coalesce(F.sum("dl"), F.lit(0))
-    ).collect()[0]
-    n_docs = int(m["n_docs"]) - int(n_dropped)
-    if n_docs <= 0:
-        raise ValueError("deleting every document — refuse to build an empty index")
-    total_tokens = int(m["total_tokens"]) - int(tokens_dropped)
-    avgdl = float(total_tokens) / n_docs
-    input_fp = input_fingerprint(
-        "delete", root, m.get("n_docs"), m.get("total_tokens"),
-        "digest-v3", n_del_ids, int(drow.h), int(drow.h2), int(drow.lo), int(drow.hi),
-    )
-    manifest: dict = {
-        "format_version": m["format_version"],
-        "eps_fold": m["eps_fold"],
-        "params": m["params"],
-        "stages": {},
-        "deleted_from": root,
-        "n_deleted": int(n_dropped),
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "avgdl": avgdl,
-        "input_fp": input_fp,
-    }
-    if resume and Path(paths.manifest).exists():
-        old = json.loads(Path(paths.manifest).read_text())
-        if old.get("input_fp") == input_fp:
-            # resume only timing bookkeeping — never the derived stats,
-            # which the old manifest would clobber with stale values
-            manifest["stages"] = old.get("stages", {})
-        else:
-            # different source/doc_ids into the same out_dir: the _done
-            # markers on disk belong to another operation — recompute
-            resume = False
+        w.stage(
+            "docs",
+            w.paths.docs,
+            lambda: spark.read.parquet(src.docs).join(sized_del, "doc_id", "left_anti"),
+        )
+        w.stage("docstats", w.paths.docstats, lambda: ds.join(sized_del, "doc_id", "left_anti"))
 
-    def stage(name: str, path: str, producer) -> DataFrame:
-        t0 = time.time()
-        if not (resume and _done(path)):
-            producer().write.mode("overwrite").parquet(path)
-            manifest["stages"][name] = {
-                "path": path,
-                "seconds": round(time.time() - t0, 3),
-                "resumed": False,
-            }
-        else:
-            manifest["stages"].setdefault(name, {"path": path, "seconds": 0.0})
-            manifest["stages"][name]["resumed"] = True
-        return spark.read.parquet(path)
-
-    stage(
-        "docs",
-        paths.docs,
-        lambda: spark.read.parquet(src.docs).join(sized_del, "doc_id", "left_anti"),
-    )
-    stage("docstats", paths.docstats, lambda: ds.join(sized_del, "doc_id", "left_anti"))
-
-    # -- filtered postings under OLD term_ids: map-only with a
-    # broadcast id set (batch deletes), or a seg_id merge-join against
-    # per-segment sorted id lists (bulk DataFrame deletes — no driver
-    # collect, per-row list bounded by segment_doc_window)
-    filtered_path = f"{out_dir}/_postings_filtered"
-    if not (resume and _done(filtered_path)):
-        postings_src = spark.read.parquet(src.postings)
-        if bulk:
+        # -- filtered postings under OLD term_ids: map-only with a
+        # broadcast id set (batch deletes), or a seg_id merge-join
+        # against per-segment sorted id lists (bulk DataFrame deletes —
+        # no driver collect, per-row list bounded by segment_doc_window)
+        def make_filtered():
+            postings = spark.read.parquet(src.postings)
+            if not bulk:
+                return postings.mapInPandas(
+                    _make_repack_fn(params, avgdl, spark.sparkContext.broadcast(deleted)),
+                    POSTINGS_SCHEMA,
+                )
             window = params.segment_doc_window
             seg_del = (
                 del_df.select(
@@ -299,53 +161,22 @@ def delete_docs(
                 .groupBy("seg_id")
                 .agg(F.sort_array(F.collect_list("doc_id")).alias("_deleted"))
             )
-            repacked = postings_src.join(seg_del.hint("merge"), "seg_id", "left").mapInPandas(
-                _make_delete_join_fn(params, avgdl), POSTINGS_SCHEMA
+            return postings.join(seg_del.hint("merge"), "seg_id", "left").mapInPandas(
+                _make_repack_fn(params, avgdl), POSTINGS_SCHEMA
             )
-        else:
-            deleted_bc = spark.sparkContext.broadcast(deleted)
-            repacked = postings_src.mapInPandas(
-                _make_delete_fn(params, avgdl, deleted_bc), POSTINGS_SCHEMA
-            )
-        repacked.write.mode("overwrite").parquet(filtered_path)
-    filtered = spark.read.parquet(filtered_path)
 
-    # -- dictionary: df from the filtered rows (df = Σ n_docs per term),
-    # dropped terms vanish, dense lexical term_ids reassigned
-    old_dict = spark.read.parquet(src.dictionary)
+        filtered = w.stage("filtered", f"{out_dir}/_postings_filtered", make_filtered)
 
-    def make_dictionary():
-        dfreq = (
-            filtered.groupBy("term_id")
-            .agg(F.sum("n_docs").alias("df"))
-            .withColumnRenamed("term_id", "term_id_old")
-            .join(
-                old_dict.select(F.col("term_id").alias("term_id_old"), "term"),
-                "term_id_old",
-            )
-            .select("term", "df")
-        )
-        return dictionary_from_dfreq(dfreq, n_docs, params, total_tokens, out_dir)
-
-    dictionary = stage("dictionary", paths.dictionary, make_dictionary)
-    manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
-
-    def make_postings():
-        remapped = (
-            filtered.withColumnRenamed("term_id", "term_id_old")
-            .join(
-                old_dict.select(F.col("term_id").alias("term_id_old"), "term"),
-                "term_id_old",
-            )
-            .join(dictionary.select("term", "term_id"), "term")
-            .select(*[f.name for f in POSTINGS_SCHEMA.fields])
-        )
-        return remapped.repartitionByRange(
-            max(1, spark.sparkContext.defaultParallelism), "term_id", "seg_id"
-        ).sortWithinPartitions("term_id", "seg_id")
-
-    stage("postings", paths.postings, make_postings)
-    write_lineage_and_metrics(spark, paths, manifest, resume)
-    if bulk:
-        del_df.unpersist()
-    return paths
+        # -- dictionary: df from the filtered rows, dropped terms vanish,
+        # dense lexical term_ids reassigned; the filtered rows then only
+        # need their term_ids remapped — no second repack
+        old_dict = spark.read.parquet(src.dictionary)
+        dictionary = w.dictionary(lambda: dfreq_from_postings(filtered, old_dict))
+        w.record_min_idf(dictionary)
+        w.stage("postings", w.paths.postings, lambda: range_clustered(
+            remap_term_ids(filtered, old_dict, dictionary).select(*POSTINGS_SCHEMA.fieldNames())
+        ))
+        return w.finish()
+    finally:
+        if bulk:
+            del_df.unpersist()

@@ -8,8 +8,10 @@ segments) never reruns.  Merge cost is
 
 - one term-keyed join per side to realign term_ids (the packed rows are
   ~1000× smaller than the raw posting stream they encode),
-- one (term_id, seg_id) repartition of packed rows,
-- a map-side decode/concat/re-encode kernel over the packed bytes.
+- one (term_id, seg_id) range repartition of packed rows,
+- the one repack kernel (builder._make_repack_fn — shared with delete
+  and compaction) decoding, concatenating and re-encoding the packed
+  bytes.  The stages, resume guard and manifest are builder.IndexWriter's.
 
 Why anything must be recomputed at all:
 
@@ -34,108 +36,17 @@ merge is engine-native capability beyond it.
 
 from __future__ import annotations
 
-import json
-import time
-from pathlib import Path
-
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..config import BM25Params, IndexParams
-from . import codec
 from .builder import (
-    POSTINGS_SCHEMA,
     IndexPaths,
-    _done,
-    _pack_group,
-    dictionary_from_dfreq,
+    IndexWriter,
     input_fingerprint,
-    write_lineage_and_metrics,
+    read_manifest,
+    remap_term_ids,
+    repack,
 )
-
-# manifest keys that must agree between the two source indexes for the
-# merged scores to be well-defined
-_COMPAT_KEYS = ("format_version", "eps_fold", "params")
-
-
-def _params_from_manifest(m: dict) -> IndexParams:
-    p = m["params"]
-    return IndexParams(
-        block_size=int(p["block_size"]),
-        segment_doc_window=int(p["segment_doc_window"]),
-        bm25=BM25Params(
-            k1=p["k1"], b=p["b"], delta=p["delta"],
-            variant=p["variant"], epsilon=p["epsilon"],
-        ),
-    )
-
-
-def _make_merge_fn(params: IndexParams, avgdl: float):
-    """mapInPandas kernel over packed rows hash-partitioned by
-    (term_id, seg_id) and sorted by (term_id, seg_id): decode each
-    group's arrays, concat-sort by doc_id (strictly increasing — a
-    duplicate doc_id across sources is a hard error), and re-pack with
-    maxima computed against the MERGED avgdl.  Groups are ≤ the number
-    of source indexes; a carry list stitches groups split across Arrow
-    batches."""
-    window = params.segment_doc_window
-
-    def pack_rows(open_rows: list) -> dict:
-        term_id, seg_id = open_rows[0][0], open_rows[0][1]
-        base = seg_id * window
-        ids = [codec.decode_docids(r[2], base) for r in open_rows]
-        tfs = [codec.decode_varint(r[3]).astype(np.int64) for r in open_rows]
-        dls = [codec.decode_varint(r[4]).astype(np.int64) for r in open_rows]
-        d = np.concatenate(ids)
-        t = np.concatenate(tfs)
-        l = np.concatenate(dls)
-        if len(open_rows) > 1:
-            order = np.argsort(d, kind="stable")
-            d, t, l = d[order], t[order], l[order]
-        if len(d) > 1 and not bool(np.all(np.diff(d) > 0)):
-            raise ValueError(
-                f"duplicate doc_id in merged group (term_id={term_id}, "
-                f"seg_id={seg_id}): source indexes must cover disjoint docs"
-            )
-        return _pack_group(term_id, seg_id, d, t, l, params, avgdl)
-
-    def merge(batches):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        open_key, open_rows, out = None, [], []
-
-        def emit():
-            pdf = pd.DataFrame(out)
-            pdf["build_part"] = pid
-            return pdf
-
-        for pdf in batches:
-            for r in zip(
-                pdf["term_id"].to_numpy(np.int64),
-                pdf["seg_id"].to_numpy(np.int64),
-                pdf["doc_ids_enc"],
-                pdf["tfs_enc"],
-                pdf["dls_enc"],
-            ):
-                key = (int(r[0]), int(r[1]))
-                if key != open_key and open_rows:
-                    out.append(pack_rows(open_rows))
-                    open_rows = []
-                open_key = key
-                open_rows.append((int(r[0]), int(r[1]), bytes(r[2]), bytes(r[3]), bytes(r[4])))
-            if len(out) >= 256:
-                yield emit()
-                out = []
-        if open_rows:
-            out.append(pack_rows(open_rows))
-        if out:
-            yield emit()
-
-    return merge
 
 
 def merge_indexes(
@@ -144,75 +55,35 @@ def merge_indexes(
     root_b: str,
     out_dir: str,
     resume: bool = True,
-    check_disjoint: bool = True,
 ) -> IndexPaths:
     """Merge the packed indexes at ``root_a`` and ``root_b`` (same
-    params, disjoint doc_ids) into a new index at ``out_dir`` that is
-    bit-identical to a fresh build over the union corpus
-    (tests/test_index_merge.py asserts table-level and score-level
-    equality)."""
+    params, disjoint doc_ids — both checked) into a new index at
+    ``out_dir`` that is bit-identical to a fresh build over the union
+    corpus (tests/test_index_merge.py asserts table-level and
+    score-level equality)."""
     pa, pb = IndexPaths(root_a), IndexPaths(root_b)
-    ma = json.loads(Path(pa.manifest).read_text())
-    mb = json.loads(Path(pb.manifest).read_text())
-    for key in _COMPAT_KEYS:
-        if ma.get(key) != mb.get(key):
-            raise ValueError(
-                f"incompatible indexes: {key} differs ({ma.get(key)!r} != {mb.get(key)!r})"
-            )
-    params = _params_from_manifest(ma)
-    paths = IndexPaths(out_dir)
-    n_docs = int(ma["n_docs"]) + int(mb["n_docs"])
-    total_tokens = int(ma["total_tokens"]) + int(mb["total_tokens"])
-    avgdl = float(total_tokens) / n_docs
+    ma, params = read_manifest(root_a)
+    mb, params_b = read_manifest(root_b)
+    if params_b != params:
+        raise ValueError(
+            f"incompatible indexes: params differ ({ma['params']!r} != {mb['params']!r})"
+        )
     input_fp = input_fingerprint(
         "merge",
         root_a, ma.get("n_docs"), ma.get("total_tokens"), ma.get("input_fp"),
         root_b, mb.get("n_docs"), mb.get("total_tokens"), mb.get("input_fp"),
     )
-    manifest: dict = {
-        "format_version": ma["format_version"],
-        "eps_fold": ma["eps_fold"],
-        "params": ma["params"],
-        "stages": {},
-        "merged_from": [root_a, root_b],
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "avgdl": avgdl,
-        "input_fp": input_fp,
-    }
-    if resume and Path(paths.manifest).exists():
-        old = json.loads(Path(paths.manifest).read_text())
-        if old.get("input_fp") == input_fp:
-            # resume only timing bookkeeping — never the derived stats,
-            # which the old manifest would clobber with stale values
-            manifest["stages"] = old.get("stages", {})
-        else:
-            # different sources into the same out_dir: on-disk _done
-            # markers belong to another merge — recompute everything
-            resume = False
-
-    def stage(name: str, path: str, producer) -> DataFrame:
-        t0 = time.time()
-        if not (resume and _done(path)):
-            producer().write.mode("overwrite").parquet(path)
-            manifest["stages"][name] = {
-                "path": path,
-                "seconds": round(time.time() - t0, 3),
-                "resumed": False,
-            }
-        else:
-            manifest["stages"].setdefault(name, {"path": path, "seconds": 0.0})
-            manifest["stages"][name]["resumed"] = True
-        return spark.read.parquet(path)
+    w = IndexWriter(spark, out_dir, params, resume, input_fp, merged_from=[root_a, root_b])
+    avgdl = w.set_stats(int(ma["n_docs"]) + int(mb["n_docs"]),
+                        int(ma["total_tokens"]) + int(mb["total_tokens"]))
 
     ds_a = spark.read.parquet(pa.docstats)
     ds_b = spark.read.parquet(pb.docstats)
-    if check_disjoint:
-        dup = ds_a.join(ds_b, "doc_id", "left_semi").count()
-        if dup:
-            raise ValueError(
-                f"source indexes share {dup} doc_ids — merge requires disjoint docs"
-            )
+    dup = ds_a.join(ds_b, "doc_id", "left_semi").count()
+    if dup:
+        raise ValueError(
+            f"source indexes share {dup} doc_ids — merge requires disjoint docs"
+        )
 
     docs_a = spark.read.parquet(pa.docs)
     docs_b = spark.read.parquet(pb.docs)
@@ -220,67 +91,36 @@ def merge_indexes(
     # a rebuild over the union corpus keeps every input column, so
     # intersecting here would silently drop one-sided columns and break
     # the merged == rebuilt contract for the docs table
-    stage(
+    w.stage(
         "docs",
-        paths.docs,
+        w.paths.docs,
         lambda: docs_a.unionByName(docs_b, allowMissingColumns=True),
     )
-    stage("docstats", paths.docstats, lambda: ds_a.unionByName(ds_b))
+    w.stage("docstats", w.paths.docstats, lambda: ds_a.unionByName(ds_b))
 
     # -- dictionary: realign by term, sum df, recompute idf + term_ids
     dict_a = spark.read.parquet(pa.dictionary)
     dict_b = spark.read.parquet(pb.dictionary)
-
-    def make_dictionary():
-        dfreq = (
-            dict_a.select("term", F.col("df").alias("df_a"))
-            .join(dict_b.select("term", F.col("df").alias("df_b")), "term", "full")
-            .select(
-                "term",
-                (F.coalesce("df_a", F.lit(0)) + F.coalesce("df_b", F.lit(0))).alias("df"),
-            )
+    dictionary = w.dictionary(lambda: (
+        dict_a.select("term", F.col("df").alias("df_a"))
+        .join(dict_b.select("term", F.col("df").alias("df_b")), "term", "full")
+        .select(
+            "term",
+            (F.coalesce("df_a", F.lit(0)) + F.coalesce("df_b", F.lit(0))).alias("df"),
         )
-        return dictionary_from_dfreq(dfreq, n_docs, params, total_tokens, out_dir)
-
-    dictionary = stage("dictionary", paths.dictionary, make_dictionary)
-    manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
+    ))
+    w.record_min_idf(dictionary)
 
     # -- postings: remap term_ids through the term string, then re-pack
     # maxima (and any shared (term, seg) groups) against the new avgdl
-    def make_postings():
-        new_map = dictionary.select("term", "term_id")
-
-        def remap(side_paths: IndexPaths, side_dict: DataFrame) -> DataFrame:
-            old_map = side_dict.select(F.col("term_id").alias("term_id_old"), "term")
-            return (
-                spark.read.parquet(side_paths.postings)
-                .withColumnRenamed("term_id", "term_id_old")
-                .join(old_map, "term_id_old")
-                .join(new_map, "term")
-                .select(
-                    "term_id", "seg_id", "doc_ids_enc", "tfs_enc", "dls_enc"
-                )
-            )
-
-        both = remap(pa, dict_a).unionByName(remap(pb, dict_b))
-        # range-partition the PRE-kernel packed rows: one exchange, the
-        # decode-merge-re-encode kernel runs once, and the output is
-        # already term_id-clustered for parquet min/max pruning.  The
-        # former hash-repartition → kernel → repartitionByRange shape
-        # paid a second exchange AND ran the kernel twice (the range
-        # partitioner samples its child plan); sampling now re-runs only
-        # the map-side remap joins (guide §2.4).
-        return (
-            both.repartitionByRange(
-                max(1, spark.sparkContext.defaultParallelism), "term_id", "seg_id"
-            )
-            .sortWithinPartitions("term_id", "seg_id")
-            .mapInPandas(_make_merge_fn(params, avgdl), POSTINGS_SCHEMA)
-        )
-
-    stage("postings", paths.postings, make_postings)
-    write_lineage_and_metrics(spark, paths, manifest, resume)
-    return paths
+    w.stage("postings", w.paths.postings, lambda: repack(
+        remap_term_ids(spark.read.parquet(pa.postings), dict_a, dictionary).unionByName(
+            remap_term_ids(spark.read.parquet(pb.postings), dict_b, dictionary)
+        ),
+        params,
+        avgdl,
+    ))
+    return w.finish()
 
 
 def upsert_index(
@@ -297,14 +137,13 @@ def upsert_index(
     (tests/test_index_merge.py::test_upsert_parity).
 
     Overlapping doc_ids never touch the driver: the docstats semi-join
-    feeds the distributed DataFrame delete path directly (r5's
-    no-collect kernel — per-segment sorted id lists, order-independent
-    digest), so a 1e8-doc delta scales by adding executors.  Two
-    packed-row passes (prune, then merge) — still no raw posting
-    shuffle.  The intermediate pruned base index
-    is deleted once the merge succeeds (it is a full index copy);
-    re-running the same upsert therefore re-prunes, and a DIFFERENT
-    upsert into the same out_dir is caught by the manifest
+    feeds the distributed DataFrame delete path directly (per-segment
+    sorted id lists, order-independent digest), so a 1e8-doc delta
+    scales by adding executors.  Two packed-row passes (prune, then
+    merge) — still no raw posting shuffle.  The intermediate pruned
+    base index (a full index copy) is removed whether or not the merge
+    succeeds; re-running the same upsert therefore re-prunes, and a
+    DIFFERENT upsert into the same out_dir is caught by the manifest
     ``input_fp`` guard rather than reusing stale artifacts."""
     import shutil
 
@@ -317,12 +156,11 @@ def upsert_index(
         .join(spark.read.parquet(pd_.docstats), "doc_id", "left_semi")
         .select("doc_id")
     )
-    n_overlap = overlap_df.count()
-    pruned_root = base_root
-    if n_overlap:
-        pruned_root = out_dir.rstrip("/") + ".base_pruned"
+    if not overlap_df.count():
+        return merge_indexes(spark, base_root, delta_root, out_dir, resume=resume)
+    pruned_root = out_dir.rstrip("/") + ".base_pruned"
+    try:
         delete_docs(spark, base_root, overlap_df, pruned_root, resume=resume)
-    result = merge_indexes(spark, pruned_root, delta_root, out_dir, resume=resume)
-    if n_overlap:
+        return merge_indexes(spark, pruned_root, delta_root, out_dir, resume=resume)
+    finally:
         shutil.rmtree(pruned_root, ignore_errors=True)
-    return result

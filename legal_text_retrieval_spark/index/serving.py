@@ -17,17 +17,15 @@ overhead (~1-2 s) is the wrong tool for interactive serving.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
-from pathlib import Path
 
 import numpy as np
 
 from ..config import BM25Params
 from ..oracle.reference_scorer import standardize_data, ws_split
 from . import codec
-from .builder import IndexPaths
+from .builder import IndexPaths, read_manifest
 
 
 @dataclass
@@ -122,10 +120,8 @@ class LocalIndexServer:
         allow_legacy: bool = False,
         memory_budget_bytes: int | str | None = "auto",
     ) -> "LocalIndexServer":
-        from .wand import FulltextIndex
-
         paths = IndexPaths(root)
-        manifest = json.loads(Path(paths.manifest).read_text())
+        manifest, index_params = read_manifest(root, allow_legacy)
         if memory_budget_bytes == "auto":
             memory_budget_bytes = system_memory_budget()
         est = cls.resident_estimate(manifest)
@@ -143,26 +139,8 @@ class LocalIndexServer:
                 "or doc partition, or use the distributed path "
                 "(index.wand.query_topk)."
             )
-        fv = manifest.get("format_version")
-        if fv != FulltextIndex.REQUIRED_FORMAT_VERSION or "eps_fold" not in manifest:
-            msg = (
-                f"index at {root}: format_version={fv!r} / eps_fold "
-                f"{'present' if 'eps_fold' in manifest else 'MISSING'} — serving "
-                f"requires format_version={FulltextIndex.REQUIRED_FORMAT_VERSION} "
-                "with eps_fold (see FulltextIndex.load). Rebuild, or pass "
-                "allow_legacy=True."
-            )
-            if not allow_legacy:
-                raise ValueError(msg)
-            import warnings
-
-            warnings.warn(msg, stacklevel=2)
-        p = manifest["params"]
-        params = BM25Params(
-            k1=p["k1"], b=p["b"], delta=p["delta"], variant=p["variant"], epsilon=p["epsilon"]
-        )
+        params, window = index_params.bm25, index_params.segment_doc_window
         srv = cls(params, manifest["avgdl"], manifest["n_docs"])
-        window = p["segment_doc_window"]
 
         dict_rows = spark.read.parquet(paths.dictionary).select("term", "term_id", "idf").collect()
         id2term = {}

@@ -34,9 +34,7 @@ assert bitwise equality of the two modes (SURVEY.md §5.3).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
-from pathlib import Path
 
 import numpy as np
 import pandas as pd
@@ -44,9 +42,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..config import BM25Params
+from ..config import BM25Params, IndexParams
 from . import codec
-from .builder import FORMAT_VERSION, IndexPaths
+from .builder import IndexPaths, read_manifest
 
 # max distinct query term_ids pushed down as an .isin literal list
 # (parquet min/max pruning); larger batches use a broadcast semi-join
@@ -76,37 +74,14 @@ class FulltextIndex:
     spark: SparkSession
     paths: IndexPaths
     manifest: dict
-
-    # manifest invariants an index must carry to be scored correctly:
-    # eps_fold (okapi ε provenance) and the current format_version
-    # (min_idf + block-max layout).  merge.py guards the same keys
-    # pairwise (_COMPAT_KEYS); load guards them absolutely.  The value
-    # is builder.FORMAT_VERSION — the writer's constant — so a layout
-    # bump cannot leave readers accepting stale indexes (or rejecting
-    # fresh ones).
-    REQUIRED_FORMAT_VERSION = FORMAT_VERSION
+    index_params: IndexParams
 
     @classmethod
     def load(
         cls, spark: SparkSession, root: str, allow_legacy: bool = False
     ) -> "FulltextIndex":
         paths = IndexPaths(root)
-        manifest = json.loads(Path(paths.manifest).read_text())
-        fv = manifest.get("format_version")
-        legacy = fv != cls.REQUIRED_FORMAT_VERSION or "eps_fold" not in manifest
-        if legacy:
-            msg = (
-                f"index at {root}: format_version={fv!r}, "
-                f"eps_fold={'present' if 'eps_fold' in manifest else 'MISSING'} — "
-                f"expected format_version={cls.REQUIRED_FORMAT_VERSION} with eps_fold; "
-                "okapi ε-fold provenance and block-max layout cannot be trusted. "
-                "Rebuild the index, or pass allow_legacy=True to open anyway."
-            )
-            if not allow_legacy:
-                raise ValueError(msg)
-            import warnings
-
-            warnings.warn(msg, stacklevel=2)
+        manifest, index_params = read_manifest(root, allow_legacy)
         # the index dirs may have been rewritten in-place (compaction,
         # resumed builds) — drop any stale cached relations for them
         for p in (paths.dictionary, paths.docstats, paths.postings, paths.docs):
@@ -114,7 +89,7 @@ class FulltextIndex:
                 spark.catalog.refreshByPath(p)
             except Exception:
                 pass
-        idx = cls(spark, paths, manifest)
+        idx = cls(spark, paths, manifest, index_params)
         # opening an index hydrates its metadata tables (dictionary,
         # docstats) into the cache eagerly — every query needs them, and
         # serving-style loads (index/serving.py) have always done the
@@ -126,10 +101,7 @@ class FulltextIndex:
 
     @property
     def params(self) -> BM25Params:
-        p = self.manifest["params"]
-        return BM25Params(
-            k1=p["k1"], b=p["b"], delta=p["delta"], variant=p["variant"], epsilon=p["epsilon"]
-        )
+        return self.index_params.bm25
 
     _dict_cache: DataFrame | None = None
     _docstats_cache: DataFrame | None = None
@@ -346,7 +318,7 @@ def query_topk(
     spark = index.spark
     params = index.params
     avgdl = index.manifest["avgdl"]
-    window = index.manifest["params"]["segment_doc_window"]
+    window = index.index_params.segment_doc_window
 
     # ONE driver collect prepares the batch: the engine tokenizer runs
     # in Spark, joined to the cached dictionary, one row per (query,
@@ -441,7 +413,7 @@ def query_topk(
         window,
         window if negative_weights else k,
         prune=(mode == "wand" and not negative_weights),
-        block_size=index.manifest["params"].get("block_size", 128),
+        block_size=index.index_params.block_size,
     )
     # hash-partition by group key + sort within partitions: groups are
     # contiguous term_id-sorted runs for the streaming kernel — ONE

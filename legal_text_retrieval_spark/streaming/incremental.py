@@ -10,10 +10,16 @@ keeps an index fresh as new corpus files land, Lucene-style:
 - new terms are appended to the dictionary with ids above the current
   max (existing term_ids are immutable);
 - doc stats are appended; global scalars (N, avgdl, idf) are
-  snapshotted in the manifest and refreshed by ``compact()`` — between
+  snapshotted in the manifest and refreshed by a compaction — between
   compactions, queries score with the last snapshot's statistics
   (standard trade-off for incremental inverted indexes; exactness is
   restored by a compaction, which tests verify).
+
+The layout params (segment_doc_window, block_size, BM25) always come
+from the index's own manifest (builder.read_manifest), never from the
+caller, so an append or a compaction cannot pack with a window the
+existing segments were not built with.  ``compact_merged`` re-packs
+through the one repack kernel shared with merge and delete.
 
 Checkpointing/restart comes free from Structured Streaming's
 checkpoint dir (north_rule resumability on the streaming path).
@@ -21,23 +27,28 @@ checkpoint dir (north_rule resumability on the streaming path).
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import IndexParams
-from ..index.builder import POSTINGS_SCHEMA, IndexPaths, _make_pack_fn
+from ..index.builder import (
+    POSTINGS_SCHEMA,
+    IndexPaths,
+    IndexWriter,
+    _make_pack_fn,
+    dfreq_from_postings,
+    read_manifest,
+    remap_term_ids,
+    repack,
+)
 from ..operators import stats as ops_stats
 
 
-def _append_batch(
-    batch: DataFrame, paths: IndexPaths, params: IndexParams, text_col: str
-) -> None:
+def _append_batch(batch: DataFrame, paths: IndexPaths, text_col: str) -> None:
     spark = batch.sparkSession
-    manifest = json.loads(Path(paths.manifest).read_text())
-    avgdl = manifest["avgdl"]  # snapshot stats (refreshed at compact())
+    manifest, params = read_manifest(paths.root)
+    avgdl = manifest["avgdl"]  # snapshot stats (refreshed at compaction)
 
     batch = batch.select("doc_id", text_col).withColumn(
         "content_sha", F.sha2(F.col(text_col), 256)
@@ -58,7 +69,7 @@ def _append_batch(
         w = Window.orderBy("term")
         add = new_terms.withColumn(
             "term_id", (F.row_number().over(w) + F.lit(max_id)).cast("long")
-        ).withColumn("idf", F.lit(0.0))  # refreshed at compact()
+        ).withColumn("idf", F.lit(0.0))  # refreshed at compaction
         add.select(*[c for c in dictionary.columns]).write.mode("append").parquet(
             paths.dictionary
         )
@@ -85,7 +96,6 @@ def start_incremental(
     spark: SparkSession,
     watch_dir: str,
     index_root: str,
-    params: IndexParams,
     checkpoint_dir: str,
     text_col: str = "content",
     schema=None,
@@ -98,7 +108,7 @@ def start_incremental(
     ).parquet(watch_dir)
     return (
         src.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda b, _eid: _append_batch(b, paths, params, text_col))
+        .foreachBatch(lambda b, _eid: _append_batch(b, paths, text_col))
         .trigger(availableNow=True)
         .start()
     )
@@ -123,7 +133,7 @@ def _swap_into_place(spark: SparkSession, index_root: str, tmp_root: str) -> Ind
     return paths
 
 
-def compact(spark: SparkSession, index_root: str, params: IndexParams, text_col: str = "content"):
+def compact(spark: SparkSession, index_root: str, text_col: str = "content"):
     """Full-exactness restore by REBUILD: global stats + idf + repack
     from the accumulated raw docs (a batch build over the union).
     Kept as the compaction oracle; ``compact_merged`` below produces
@@ -132,16 +142,17 @@ def compact(spark: SparkSession, index_root: str, params: IndexParams, text_col:
     from ..index.builder import build_index
 
     paths = IndexPaths(index_root)
+    _, params = read_manifest(index_root)
     docs = spark.read.parquet(paths.docs).select("doc_id", text_col)
     tmp_root = index_root.rstrip("/") + ".compact"
     build_index(spark, docs, tmp_root, params, text_col=text_col, resume=False)
     return _swap_into_place(spark, index_root, tmp_root)
 
 
-def compact_merged(spark: SparkSession, index_root: str, params: IndexParams):
+def compact_merged(spark: SparkSession, index_root: str):
     """Exactness-restoring compaction WITHOUT the build shuffle — the
-    merge kernel (index/merge.py) generalized to one postings dir
-    holding base + streamed generations:
+    repack kernel (index/builder._make_repack_fn, shared with merge and
+    delete) over one postings dir holding base + streamed generations:
 
     - exact n_docs/total_tokens/avgdl from ONE docstats scan (the
       appended stats are already on disk);
@@ -161,68 +172,22 @@ def compact_merged(spark: SparkSession, index_root: str, params: IndexParams):
     to ``compact`` (tests/test_streaming_incremental.py)."""
     import shutil
 
-    from ..index.builder import (
-        dictionary_from_dfreq,
-        write_lineage_and_metrics,
-    )
-    from ..index.merge import _make_merge_fn
-
     paths = IndexPaths(index_root)
-    old_manifest = json.loads(Path(paths.manifest).read_text())
+    _, params = read_manifest(index_root)
     tmp_root = index_root.rstrip("/") + ".compact"
-    out = IndexPaths(tmp_root)
     shutil.rmtree(tmp_root, ignore_errors=True)
-    Path(tmp_root).mkdir(parents=True)
-
-    ds = spark.read.parquet(paths.docstats)
-    n_docs, total_tokens = ds.agg(F.count("*"), F.sum("dl")).collect()[0]
-    n_docs, total_tokens = int(n_docs), int(total_tokens)
-    avgdl = float(total_tokens) / n_docs
-    manifest: dict = {
-        "format_version": old_manifest["format_version"],
-        "eps_fold": old_manifest["eps_fold"],
-        "params": old_manifest["params"],
-        "stages": {},
-        "compacted_from": index_root,
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "avgdl": avgdl,
-    }
+    w = IndexWriter(spark, tmp_root, params, resume=False, compacted_from=index_root)
+    avgdl = w.set_stats(*spark.read.parquet(paths.docstats).agg(F.count("*"), F.sum("dl")).collect()[0])
     # docs/docstats are already the union on disk — copy verbatim
-    shutil.copytree(paths.docs, out.docs)
-    shutil.copytree(paths.docstats, out.docstats)
+    shutil.copytree(paths.docs, w.paths.docs)
+    shutil.copytree(paths.docstats, w.paths.docstats)
 
     postings_all = spark.read.parquet(paths.postings)
     old_dict = spark.read.parquet(paths.dictionary)
-    old_map = old_dict.select(F.col("term_id").alias("term_id_old"), "term")
-    dfreq = (
-        postings_all.groupBy("term_id")
-        .agg(F.sum("n_docs").alias("df"))
-        .withColumnRenamed("term_id", "term_id_old")
-        .join(old_map, "term_id_old")
-        .select("term", "df")
-    )
-    dictionary = dictionary_from_dfreq(dfreq, n_docs, params, total_tokens, tmp_root)
-    dictionary.write.mode("overwrite").parquet(out.dictionary)
-    dictionary = spark.read.parquet(out.dictionary)
-    manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
-
-    remapped = (
-        postings_all.withColumnRenamed("term_id", "term_id_old")
-        .join(old_map, "term_id_old")
-        .join(dictionary.select("term", "term_id"), "term")
-        .select("term_id", "seg_id", "doc_ids_enc", "tfs_enc", "dls_enc")
-    )
-    # range-partition BEFORE the merge kernel: one exchange, kernel runs
-    # once (the former post-kernel repartitionByRange re-executed it via
-    # range-boundary sampling), output term_id-clustered (guide §2.4)
-    packed = (
-        remapped.repartitionByRange(
-            max(1, spark.sparkContext.defaultParallelism), "term_id", "seg_id"
-        )
-        .sortWithinPartitions("term_id", "seg_id")
-        .mapInPandas(_make_merge_fn(params, avgdl), POSTINGS_SCHEMA)
-    )
-    packed.write.mode("overwrite").parquet(out.postings)
-    write_lineage_and_metrics(spark, out, manifest, resume=False)
+    dictionary = w.dictionary(lambda: dfreq_from_postings(postings_all, old_dict))
+    w.record_min_idf(dictionary)
+    w.stage("postings", w.paths.postings, lambda: repack(
+        remap_term_ids(postings_all, old_dict, dictionary), params, avgdl
+    ))
+    w.finish()
     return _swap_into_place(spark, index_root, tmp_root)

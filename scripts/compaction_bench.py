@@ -75,7 +75,7 @@ def main(n_docs: int, n_batches: int, cores: int) -> None:
         ).write.mode("overwrite").parquet(watch)
         t0 = time.time()
         q = incremental.start_incremental(
-            spark, watch, f"{root}/idx", params,
+            spark, watch, f"{root}/idx",
             checkpoint_dir=f"{root}/ckpt/b{b}",
             schema=spark.read.parquet(watch).schema,
         )
@@ -83,7 +83,7 @@ def main(n_docs: int, n_batches: int, cores: int) -> None:
         ingest_s += time.time() - t0
 
     _, compact_s = timed(
-        lambda: incremental.compact_merged(spark, f"{root}/idx", params)
+        lambda: incremental.compact_merged(spark, f"{root}/idx")
     )
 
     _, oneshot_s = timed(

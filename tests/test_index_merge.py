@@ -219,3 +219,24 @@ def test_upsert_cleans_pruned_base(spark, tiny_docs, tmp_path):
     out_dir = str(tmp_path / "ups")
     upsert_index(spark, pb.root, pdl.root, out_dir)
     assert not Path(out_dir + ".base_pruned").exists()
+
+
+def test_upsert_cleans_pruned_base_on_failure(spark, tiny_docs, tmp_path, monkeypatch):
+    """A failing merge step still removes the .base_pruned full-index
+    copy, and its error reaches the caller."""
+    from legal_text_retrieval_spark.index import merge as M
+
+    pb = _build(spark, tiny_docs.filter(F.col("doc_id") < 150), tmp_path / "base", PARAMS)
+    pdl = _build(spark, tiny_docs.filter(F.col("doc_id") >= 100), tmp_path / "delta", PARAMS)
+    seen = []
+
+    def failing_merge(spark, root_a, *args, **kwargs):
+        seen.append(Path(root_a, "manifest.json").exists())
+        raise RuntimeError("merge step failed")
+
+    monkeypatch.setattr(M, "merge_indexes", failing_merge)
+    out_dir = str(tmp_path / "ups")
+    with pytest.raises(RuntimeError, match="merge step failed"):
+        M.upsert_index(spark, pb.root, pdl.root, out_dir)
+    assert seen == [True]  # the pruned base existed when the merge ran
+    assert not Path(out_dir + ".base_pruned").exists()

@@ -55,6 +55,24 @@ def test_partial_resume_bit_identical(spark, tiny_docs, tmp_path):
     assert _postings_fingerprint(spark, part) == want
 
 
+
+def test_resume_with_other_params_recomputes(spark, tiny_docs, tmp_path):
+    """Resuming a build into a directory built with different layout
+    params must recompute every stage, not stamp the new params on the
+    old stages' data."""
+    import json
+
+    other = IndexParams(block_size=8, segment_doc_window=32, bm25=PARAMS.bm25)
+    root = str(tmp_path / "idx")
+    builder.build_index(spark, tiny_docs, root, PARAMS)
+    paths = builder.build_index(spark, tiny_docs, root, other, resume=True)
+    manifest = json.loads(Path(paths.manifest).read_text())
+    assert not any(s["resumed"] for s in manifest["stages"].values())
+    assert manifest["params"]["segment_doc_window"] == 32
+    fresh = str(tmp_path / "fresh")
+    builder.build_index(spark, tiny_docs, fresh, other)
+    assert _postings_fingerprint(spark, root) == _postings_fingerprint(spark, fresh)
+
 def test_wand_pruning_skips_blocks(spark):
     """On a corpus with one dominant doc per term region, block-max
     pruning must produce the same top-k as exhaustive while the block

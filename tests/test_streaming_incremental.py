@@ -40,7 +40,6 @@ def test_stream_append_then_compact(spark, tiny_corpus_pdf, tmp_path):
             spark,
             str(watch / sub),
             root,
-            PARAMS,
             checkpoint_dir=str(tmp_path / f"ckpt_{sub}"),
             schema=schema,
         )
@@ -66,8 +65,8 @@ def test_stream_append_then_compact(spark, tiny_corpus_pdf, tmp_path):
     shutil.copytree(root, root2)
 
     # compaction restores exact batch semantics
-    incremental.compact(spark, root, PARAMS)
-    incremental.compact_merged(spark, root2, PARAMS)
+    incremental.compact(spark, root)
+    incremental.compact_merged(spark, root2)
 
     import json
     from pathlib import Path
