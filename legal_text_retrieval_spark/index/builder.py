@@ -13,9 +13,11 @@ Physical design, chosen for 10^12-file scale:
 - **Two-phase agg for tf** (Catalyst partial+final) — the SPIMI
   per-partition "local run" is the partial hash agg; the shuffle-merge
   by term is the final agg + segment pack.
-- **Arrow-vectorized pack UDF only at the very end**: one
-  ``applyInPandas`` per (term, segment) group that delta+varint-packs
-  docIDs/tfs/dls and computes per-block max scores.  No per-row Python.
+- **Arrow-vectorized pack kernel only at the very end**: one streaming
+  ``mapInPandas`` over the (term, segment)-sorted rows walks each
+  group as a contiguous run (``runs``) and packs it with
+  ``codec.pack_row`` — delta+varint docIDs/tfs/dls plus per-block max
+  scores.  No per-row Python.
 - **Checkpoint-resumable**: each stage writes Parquet with _SUCCESS;
   re-running skips completed stages (north_rule resumability).
 - **Integrity**: per-row sha256(content) stored at ingest and verified
@@ -214,7 +216,8 @@ class IndexWriter:
 
     def record_min_idf(self, dictionary: DataFrame) -> None:
         # min_idf < 0 (okapi negative eps floor) invalidates WAND's
-        # block-max bounds — recorded so the query path can refuse loudly
+        # block-max bounds — recorded so the query path switches to
+        # exhaustive decode + all-query pads (wand.query_topk)
         self.manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
 
     def finish(self) -> IndexPaths:
@@ -266,125 +269,103 @@ def assign_term_ids(
     return assign_dense_ids(df, ["term"], "term_id", distributed, materialize_path)
 
 
+def runs(batches, keys: tuple, cols: tuple):
+    """The one run walker of the streaming kernels (pack, repack and
+    WAND): over pandas batches whose rows arrive grouped by ``keys``,
+    yield ``(key, {col: ndarray})`` once per contiguous run of equal
+    ``keys``.  The open run at the end of a batch is carried into the
+    next one, so a run that spans batch boundaries is yielded whole."""
+    names = (*keys, *cols)
+    carry = None
+    for pdf in batches:
+        arrs = {c: pdf[c].to_numpy() for c in names}
+        if carry is not None:
+            arrs = {c: np.concatenate([carry[c], arrs[c]]) for c in names}
+        n = len(arrs[keys[0]])
+        if n == 0:
+            continue
+        change = np.zeros(n - 1, dtype=bool)
+        for c in keys:
+            change |= arrs[c][1:] != arrs[c][:-1]
+        starts = np.concatenate([[0], np.flatnonzero(change) + 1])
+        for a, b in zip(starts[:-1], starts[1:]):
+            yield tuple(arrs[c][a] for c in keys), {c: arrs[c][a:b] for c in cols}
+        carry = {c: arrs[c][starts[-1]:] for c in names}
+    if carry is not None:
+        yield tuple(carry[c][0] for c in keys), {c: carry[c] for c in cols}
+
+
 def _pack_group(term_id, seg_id, doc_ids, tfs, dls, params: IndexParams, avgdl: float):
     """Pack one (term, segment) group of docID-sorted postings."""
-    bs = params.block_size
     p = params.bm25
-    base = int(seg_id) * params.segment_doc_window
-    ids_enc = codec.encode_docids(doc_ids, base)
-    tfs_enc = codec.encode_varint(tfs)
-    dls_enc = codec.encode_varint(dls)
     tfp = codec.tf_part(tfs, dls, p.k1, p.b, avgdl, p.variant)
-    n = len(doc_ids)
-    nblocks = (n + bs - 1) // bs
-    bf, bl, bm = [], [], []
-    for i in range(nblocks):
-        s, e = i * bs, min((i + 1) * bs, n)
-        bf.append(int(doc_ids[s]))
-        bl.append(int(doc_ids[e - 1]))
-        bm.append(float(tfp[s:e].max()))
     return {
-        "build_part": -1,  # stamped by the pack kernel
+        "build_part": -1,  # stamped by _emit
         "term_id": int(term_id),
         "seg_id": int(seg_id),
-        "n_docs": n,
-        "doc_ids_enc": ids_enc,
-        "tfs_enc": tfs_enc,
-        "dls_enc": dls_enc,
-        "block_first": bf,
-        "block_last": bl,
-        "block_max_tfpart": bm,
-        "seg_max_tfpart": float(tfp.max()),
-        "enc_bytes": len(ids_enc) + len(tfs_enc) + len(dls_enc),
+        "n_docs": len(doc_ids),
+        **codec.pack_row(doc_ids, tfs, dls, int(seg_id) * params.segment_doc_window,
+                         params.block_size, tfp),
     }
+
+
+def _emit(rows):
+    """Packed-row dicts → kernel output frames of up to 256 rows, each
+    stamped with the producing partition (``build_part``)."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    part = ctx.partitionId() if ctx is not None else -1
+    out = []
+    for row in rows:
+        out.append(row)
+        if len(out) == 256:
+            yield pd.DataFrame(out).assign(build_part=part)
+            out = []
+    if out:
+        yield pd.DataFrame(out).assign(build_part=part)
+
+
+_GROUP = ("term_id", "seg_id")
 
 
 def _make_pack_fn(params: IndexParams, avgdl: float):
     """Streaming pack kernel for mapInPandas over partitions that are
-    hash-partitioned by (term_id, seg_id) and sorted by
-    (term_id, seg_id, doc_id): groups are contiguous runs; a carry
-    buffer stitches runs that span Arrow batch boundaries.  No pandas
+    partitioned by (term_id, seg_id) and sorted by (term_id, seg_id,
+    doc_id): each group is one contiguous run (``runs``).  No pandas
     per-group frames, no per-group sort — pure numpy slicing."""
 
-    def pack(batches) -> "pd.DataFrame":
-        carry = None  # (term_id, seg_id, doc_ids, tfs, dls) columns of the open run
-        rows = []
-
-        def flush_groups(t, s, d, tf, dl, final: bool):
-            """Pack all complete groups in the concatenated arrays;
-            return the trailing open run (or None if final)."""
-            nonlocal rows
-            if len(t) == 0:
-                return None
-            # boundaries where (term_id, seg_id) changes
-            change = np.flatnonzero((t[1:] != t[:-1]) | (s[1:] != s[:-1])) + 1
-            starts = np.concatenate([[0], change])
-            ends = np.concatenate([change, [len(t)]])
-            last = len(starts) - 1
-            for gi in range(last + (1 if final else 0)):
-                a, b = starts[gi], ends[gi]
-                rows.append(
-                    _pack_group(t[a], s[a], d[a:b], tf[a:b], dl[a:b], params, avgdl)
-                )
-            if final:
-                return None
-            a = starts[last]
-            return (t[a:], s[a:], d[a:], tf[a:], dl[a:])
-
-        for pdf in batches:
-            t = pdf["term_id"].to_numpy(np.int64)
-            s = pdf["seg_id"].to_numpy(np.int64)
-            d = pdf["doc_id"].to_numpy(np.int64)
-            tf = pdf["tf"].to_numpy(np.int64)
-            dl = pdf["dl"].to_numpy(np.int64)
-            if carry is not None:
-                t = np.concatenate([carry[0], t])
-                s = np.concatenate([carry[1], s])
-                d = np.concatenate([carry[2], d])
-                tf = np.concatenate([carry[3], tf])
-                dl = np.concatenate([carry[4], dl])
-            carry = flush_groups(t, s, d, tf, dl, final=False)
-            if len(rows) >= 256:
-                yield _emit(rows)
-                rows = []
-        if carry is not None:
-            flush_groups(*carry, final=True)
-        if rows:
-            yield _emit(rows)
+    def pack(batches):
+        return _emit(
+            _pack_group(*key, g["doc_id"], g["tf"], g["dl"], params, avgdl)
+            for key, g in runs(batches, _GROUP, ("doc_id", "tf", "dl"))
+        )
 
     return pack
 
 
-def _emit(rows: list) -> pd.DataFrame:
-    """Packed-row dicts → a kernel output frame stamped with the
-    producing partition (``build_part``)."""
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    pdf = pd.DataFrame(rows)
-    pdf["build_part"] = ctx.partitionId() if ctx is not None else -1
-    return pdf
-
-
-def _make_repack_fn(params: IndexParams, avgdl: float, deleted_bc=None):
+def _make_repack_fn(params: IndexParams, avgdl: float):
     """The one repack kernel: merge, delete and compaction rewrite
     packed rows only through it.  Rows arrive grouped by contiguous
     (term_id, seg_id) — merge/compaction range-partition and sort them,
     a delete's rows are one group each.  Each row is decoded and its
-    deleted doc_ids dropped by one sorted searchsorted membership test;
-    a group's rows are concatenated, doc_id-sorted when there is more
+    deleted doc_ids — its sorted ``_deleted`` list (a delete; null or
+    no column = none) — dropped by one searchsorted membership test; a
+    group's rows are concatenated, doc_id-sorted when there is more
     than one (a duplicate doc_id is a hard error: sources must cover
     disjoint docs) and re-packed with maxima against ``avgdl``.  Fully
-    deleted groups emit nothing.  A row's deleted ids are its
-    ``_deleted`` column (DataFrame delete; null = none), the slice of
-    the broadcast sorted array ``deleted_bc`` inside its segment (id-list
-    delete), or none (merge, compaction).  The open group carries across
-    Arrow batch boundaries."""
+    deleted groups emit nothing."""
     window = params.segment_doc_window
+    cols = ("doc_ids_enc", "tfs_enc", "dls_enc", "_deleted")
 
-    def pack(key, parts) -> list:
-        if not parts:
-            return []
+    def repack_group(key, g) -> list:
+        parts = []
+        for ids_enc, tfs_enc, dls_enc, dels in zip(*(g[c] for c in cols)):
+            d, tf, dl = codec.unpack_row(ids_enc, tfs_enc, dls_enc, int(key[1]) * window)
+            if dels is not None and len(dels):
+                keep = dels[np.minimum(np.searchsorted(dels, d), len(dels) - 1)] != d
+                d, tf, dl = d[keep], tf[keep], dl[keep]
+            parts.append((d, tf, dl))
         d, tf, dl = (np.concatenate(c) for c in zip(*parts))
         if len(parts) > 1:
             order = np.argsort(d, kind="stable")
@@ -394,42 +375,11 @@ def _make_repack_fn(params: IndexParams, avgdl: float, deleted_bc=None):
                 f"duplicate doc_id in merged group (term_id={key[0]}, "
                 f"seg_id={key[1]}): source indexes must cover disjoint docs"
             )
-        return [_pack_group(key[0], key[1], d, tf, dl, params, avgdl)] if len(d) else []
+        return [_pack_group(*key, d, tf, dl, params, avgdl)] if len(d) else []
 
     def kernel(batches):
-        deleted = None if deleted_bc is None else deleted_bc.value
-        key, parts, out = None, [], []
-        for pdf in batches:
-            dels_col = pdf["_deleted"] if "_deleted" in pdf.columns else [None] * len(pdf)
-            for t, s, ids_enc, tfs_enc, dls_enc, dels in zip(
-                pdf["term_id"].to_numpy(np.int64),
-                pdf["seg_id"].to_numpy(np.int64),
-                pdf["doc_ids_enc"],
-                pdf["tfs_enc"],
-                pdf["dls_enc"],
-                dels_col,
-            ):
-                base = int(s) * window
-                d = codec.decode_docids(bytes(ids_enc), base)
-                tf = codec.decode_varint(bytes(tfs_enc)).astype(np.int64)
-                dl = codec.decode_varint(bytes(dls_enc)).astype(np.int64)
-                if deleted is not None:
-                    lo, hi = np.searchsorted(deleted, [base, base + window])
-                    dels = deleted[lo:hi]
-                if dels is not None and len(dels):
-                    dels = np.asarray(dels, dtype=np.int64)
-                    keep = dels[np.minimum(np.searchsorted(dels, d), len(dels) - 1)] != d
-                    d, tf, dl = d[keep], tf[keep], dl[keep]
-                if (int(t), int(s)) != key:
-                    out.extend(pack(key, parts))
-                    key, parts = (int(t), int(s)), []
-                parts.append((d, tf, dl))
-            if len(out) >= 256:
-                yield _emit(out)
-                out = []
-        out.extend(pack(key, parts))
-        if out:
-            yield _emit(out)
+        batches = (b if "_deleted" in b else b.assign(_deleted=None) for b in batches)
+        return _emit(row for key, g in runs(batches, _GROUP, cols) for row in repack_group(key, g))
 
     return kernel
 

@@ -12,6 +12,11 @@ Layout per posting segment (one row of the postings table):
 - ``tfs`` / ``dls``: positive int64 → LEB128 (no delta).
 - blocks of ``block_size`` postings carry (first_doc, last_doc,
   max_tf_part) metadata for block-max WAND pruning.
+
+``pack_row`` and ``unpack_row`` are the only owners of that row
+format: every kernel that writes a posting row (build pack, repack)
+and every reader (the WAND kernel, serving load) goes through them,
+never through the varint/docid primitives below.
 """
 
 from __future__ import annotations
@@ -83,6 +88,37 @@ def decode_docids(buf: bytes, base: int) -> np.ndarray:
         return deltas
     out = np.cumsum(deltas)
     return out + base
+
+
+def pack_row(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, base: int,
+             block_size: int, tfp: np.ndarray) -> dict:
+    """Encode one posting row of ``len(doc_ids) ≥ 1`` docID-sorted
+    postings: the three encoded fields, per-block (first doc, last doc,
+    max ``tfp``) metadata over blocks of ``block_size`` postings, the
+    row maximum and the encoded byte count."""
+    ids_enc = encode_docids(doc_ids, base)
+    tfs_enc = encode_varint(tfs)
+    dls_enc = encode_varint(dls)
+    starts = np.arange(0, len(doc_ids), block_size)
+    return {
+        "doc_ids_enc": ids_enc,
+        "tfs_enc": tfs_enc,
+        "dls_enc": dls_enc,
+        "block_first": doc_ids[starts].tolist(),
+        "block_last": doc_ids[np.append(starts[1:], len(doc_ids)) - 1].tolist(),
+        "block_max_tfpart": np.maximum.reduceat(tfp, starts).tolist(),
+        "seg_max_tfpart": float(tfp.max()),
+        "enc_bytes": len(ids_enc) + len(tfs_enc) + len(dls_enc),
+    }
+
+
+def unpack_row(ids_enc, tfs_enc, dls_enc, base: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The int64 (doc_ids, tfs, dls) of one encoded posting row."""
+    return (
+        decode_docids(ids_enc, base),
+        decode_varint(tfs_enc).astype(np.int64),
+        decode_varint(dls_enc).astype(np.int64),
+    )
 
 
 def tf_part(tf: np.ndarray, dl: np.ndarray, k1: float, b: float, avgdl: float, variant: str) -> np.ndarray:

@@ -9,13 +9,15 @@ the build shuffle:
   (builder._make_repack_fn — shared with merge and compaction) over
   the packed rows — decode, mask out deleted doc_ids, re-pack against
   the NEW avgdl (maxima recompute is mandatory: avgdl moves when docs
-  leave).  Batch deletes (iterable input) broadcast the sorted id
-  array and stay map-only; bulk deletes (DataFrame input, e.g. 10⁸ ids
-  from a dedup sweep) never touch the driver — ids group into
-  per-segment sorted lists merge-joined on seg_id, so per-row state is
-  bounded by segment_doc_window.  Surviving doc_ids/deltas are
+  leave).  Both input shapes group the ids into per-segment sorted
+  ``_deleted`` lists joined to the packed rows on seg_id, so per-row
+  state is bounded by segment_doc_window: batch deletes (iterable
+  input) broadcast the lists and stay map-only; bulk deletes
+  (DataFrame input, e.g. 10⁸ ids from a dedup sweep) never touch the
+  driver and merge-join them.  Surviving doc_ids/deltas are
   unchanged, so segments re-encode to the bytes a rebuild would
-  produce.
+  produce.  The filtered rows are a cached relation that the
+  dictionary and postings stages share, never a staged directory.
 - **dictionary**: df is recomputed FROM the filtered packed rows
   (df = Σ n_docs over a term's segments), terms with df=0 drop out,
   and term_ids are reassigned as dense lexical ranks over the
@@ -36,6 +38,7 @@ need at training-corpus scale.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,8 +67,9 @@ def delete_docs(
 
     Two input shapes, one result:
 
-    - **iterable of int** (batch deletes — takedowns):
-      ids are broadcast and the postings pass stays map-only.
+    - **iterable of int** (batch deletes — takedowns): the
+      per-segment id lists are broadcast and the postings pass stays
+      map-only.
     - **single-column DataFrame** (bulk deletes — dedup-sweep feedback,
       license filtering at 10⁸ ids, upsert overlaps): never collected
       to the driver.
@@ -89,8 +93,10 @@ def delete_docs(
             .cache()
         )
     else:
+        # from pandas: a LocalTableScan, not a Python RDD (CLAUDE.md)
         deleted = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
-        del_df = spark.createDataFrame([(int(x),) for x in deleted], "doc_id bigint")
+        del_df = spark.createDataFrame(pd.DataFrame({"doc_id": deleted}), "doc_id bigint")
+    filtered = None
     try:
         # order-independent delete-set digest — same recipe for both
         # input shapes, so a list delete and the equivalent DataFrame
@@ -141,31 +147,22 @@ def delete_docs(
         )
         w.stage("docstats", w.paths.docstats, lambda: ds.join(sized_del, "doc_id", "left_anti"))
 
-        # -- filtered postings under OLD term_ids: map-only with a
-        # broadcast id set (batch deletes), or a seg_id merge-join
-        # against per-segment sorted id lists (bulk DataFrame deletes —
-        # no driver collect, per-row list bounded by segment_doc_window)
-        def make_filtered():
-            postings = spark.read.parquet(src.postings)
-            if not bulk:
-                return postings.mapInPandas(
-                    _make_repack_fn(params, avgdl, spark.sparkContext.broadcast(deleted)),
-                    POSTINGS_SCHEMA,
-                )
-            window = params.segment_doc_window
-            seg_del = (
-                del_df.select(
-                    "doc_id",
-                    F.floor(F.col("doc_id") / window).cast("long").alias("seg_id"),
-                )
-                .groupBy("seg_id")
-                .agg(F.sort_array(F.collect_list("doc_id")).alias("_deleted"))
-            )
-            return postings.join(seg_del.hint("merge"), "seg_id", "left").mapInPandas(
-                _make_repack_fn(params, avgdl), POSTINGS_SCHEMA
-            )
-
-        filtered = w.stage("filtered", f"{out_dir}/_postings_filtered", make_filtered)
+        # -- filtered postings under OLD term_ids: the repack kernel
+        # over the packed rows left-joined to per-segment sorted id
+        # lists — broadcast (batch deletes: map-only) or merge-joined
+        # (bulk deletes: no driver collect); cached, because the
+        # dictionary and postings stages both consume it
+        window = params.segment_doc_window
+        seg_del = (
+            del_df.groupBy(F.floor(F.col("doc_id") / window).cast("long").alias("seg_id"))
+            .agg(F.sort_array(F.collect_list("doc_id")).alias("_deleted"))
+        )
+        filtered = (
+            spark.read.parquet(src.postings)
+            .join(seg_del.hint("merge") if bulk else F.broadcast(seg_del), "seg_id", "left")
+            .mapInPandas(_make_repack_fn(params, avgdl), POSTINGS_SCHEMA)
+            .cache()
+        )
 
         # -- dictionary: df from the filtered rows, dropped terms vanish,
         # dense lexical term_ids reassigned; the filtered rows then only
@@ -180,3 +177,5 @@ def delete_docs(
     finally:
         if bulk:
             del_df.unpersist()
+        if filtered is not None:
+            filtered.unpersist()

@@ -164,10 +164,8 @@ class LocalIndexServer:
             .collect()
         ):
             term = id2term[r.term_id]
-            base = r.seg_id * window
-            ids = codec.decode_docids(bytes(r.doc_ids_enc), base)
-            tfs = codec.decode_varint(bytes(r.tfs_enc)).astype(np.int64)
-            dls = codec.decode_varint(bytes(r.dls_enc)).astype(np.int64)
+            ids, tfs, dls = codec.unpack_row(r.doc_ids_enc, r.tfs_enc, r.dls_enc,
+                                             r.seg_id * window)
             tfp = codec.tf_part(tfs, dls, params.k1, params.b, srv.avgdl, params.variant)
             parts.setdefault(term, []).append((r.seg_id, ids, tfp))
         srv.all_doc_ids = np.sort(

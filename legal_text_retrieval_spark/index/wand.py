@@ -44,7 +44,7 @@ from pyspark.sql import types as T
 
 from ..config import BM25Params, IndexParams
 from . import codec
-from .builder import IndexPaths, read_manifest
+from .builder import IndexPaths, read_manifest, runs
 
 # max distinct query term_ids pushed down as an .isin literal list
 # (parquet min/max pruning); larger batches use a broadcast semi-join
@@ -142,16 +142,15 @@ def _make_group_fn(
     params: BM25Params, avgdl: float, window: int, k: int, prune: bool, block_size: int = 128
 ):
     """The per-(qid, segment) WAND evaluation on raw arrays, called by
-    the streaming kernel once per group.  ``rows`` fields must already
+    the streaming kernel once per group.  The group's rows must already
     be in ascending term_id order (fold order == lexical term order)."""
     p = params
     bs = block_size
 
-    def group_topk(seg_id, qtf_arr, idf_arr, segmax_arr, blocks, bufs):
-        """blocks[i] = (block_first, block_last, block_max) lists;
-        bufs[i] = (doc_ids_enc, tfs_enc, dls_enc).  Returns
-        (doc_ids, scores, n_cand) of the segment-local top-k, or None
-        when no candidate survives.
+    def group_topk(seg_id, g):
+        """``g`` holds the group's columns (``_RUN_COLS``), one entry per
+        query term.  Returns (doc_ids, scores, n_cand) of the
+        segment-local top-k, or None when no candidate survives.
 
         Dense span-local accumulator (the serving-mode scatter-add
         trick, index/serving.py): scores/seen are arrays indexed by
@@ -165,14 +164,14 @@ def _make_group_fn(
         order (tests/test_wand_kernel_property.py,
         test_index_engine.py)."""
         base = int(seg_id) * window
-        span = max(int(b[1][-1]) for b in blocks) - base + 1
+        span = max(int(bl[-1]) for bl in g["block_last"]) - base + 1
         scores = np.zeros(span, dtype=np.float64)
         seen = np.zeros(span, dtype=bool)
         n_seen = 0
-        weights = qtf_arr * idf_arr
+        weights = g["qtf"] * g["idf"]
         # bound of the terms after i: suffix sums clamped at ≥ 0 (a
         # running subtraction can drift below the true tail)
-        rem_afters = np.maximum(np.cumsum((weights * segmax_arr)[::-1])[::-1], 0.0)
+        rem_afters = np.maximum(np.cumsum((weights * g["seg_max_tfpart"])[::-1])[::-1], 0.0)
         rem_afters = np.append(rem_afters[1:], 0.0)
 
         for i in range(len(weights)):
@@ -185,9 +184,9 @@ def _make_group_fn(
                 if prune and n_seen >= k
                 else -np.inf
             )
-            bf = np.asarray(blocks[i][0], dtype=np.int64)
-            blast = np.asarray(blocks[i][1], dtype=np.int64)
-            bmax = np.asarray(blocks[i][2], dtype=np.float64)
+            bf = np.asarray(g["block_first"][i], dtype=np.int64)
+            blast = np.asarray(g["block_last"][i], dtype=np.int64)
+            bmax = np.asarray(g["block_max_tfpart"][i], dtype=np.float64)
             # decode-block decision (vectorized over blocks)
             if prune and theta > -np.inf and n_seen:
                 # any seen doc inside [bf, bl]?  prefix-sum range test
@@ -200,17 +199,15 @@ def _make_group_fn(
                 keep = np.ones(len(bf), dtype=bool)
             if not keep.any():
                 continue
-            ids_all = codec.decode_docids(bufs[i][0], base)
-            tfs_all = codec.decode_varint(bufs[i][1]).astype(np.int64)
-            dls_all = codec.decode_varint(bufs[i][2]).astype(np.int64)
-            if keep.all():
-                ids, tfs, dls = ids_all, tfs_all, dls_all
-            else:
+            ids, tfs, dls = codec.unpack_row(
+                g["doc_ids_enc"][i], g["tfs_enc"][i], g["dls_enc"][i], base
+            )
+            if not keep.all():
                 # blocks are fixed-size except the last — expand the
                 # per-block mask with the TRUE build block size (an
                 # inferred size would misalign on a short tail block)
-                sel = np.repeat(keep, bs)[: len(ids_all)]
-                ids, tfs, dls = ids_all[sel], tfs_all[sel], dls_all[sel]
+                sel = np.repeat(keep, bs)[: len(ids)]
+                ids, tfs, dls = ids[sel], tfs[sel], dls[sel]
             contrib = w * codec.tf_part(tfs, dls, p.k1, p.b, avgdl, p.variant)
             # dense scatter-add: one add per (doc, term), term order
             slots = ids - base
@@ -228,15 +225,8 @@ def _make_group_fn(
     return group_topk
 
 
-def _group_arrays(pdf: pd.DataFrame):
-    """Column extraction for one group (pdf already in ascending
-    term_id order)."""
-    qtf = pdf["qtf"].to_numpy(np.float64)
-    idf = pdf["idf"].to_numpy(np.float64)
-    segmax = pdf["seg_max_tfpart"].to_numpy(np.float64)
-    blocks = list(zip(pdf["block_first"], pdf["block_last"], pdf["block_max_tfpart"]))
-    bufs = list(zip(pdf["doc_ids_enc"], pdf["tfs_enc"], pdf["dls_enc"]))
-    return qtf, idf, segmax, blocks, bufs
+_RUN_COLS = ("qtf", "idf", "seg_max_tfpart", "block_first", "block_last",
+             "block_max_tfpart", "doc_ids_enc", "tfs_enc", "dls_enc")
 
 
 def _make_stream_kernel(
@@ -244,56 +234,26 @@ def _make_stream_kernel(
 ):
     """mapInPandas form: the joined relation arrives hash-partitioned
     by (qid, seg_id) and sorted by (qid, seg_id, term_id), so groups
-    are contiguous runs; a carry buffer stitches runs spanning Arrow
-    batch boundaries.  Streaming runs instead of applyInPandas avoids
-    Spark's per-group overhead — the same trick the posting pack
-    kernel uses (builder._make_pack_fn)."""
+    are contiguous runs, walked by the engine's one run walker
+    (``builder.runs``) like the pack and repack kernels.  Streaming
+    runs instead of applyInPandas avoids Spark's per-group overhead."""
     group_topk = _make_group_fn(params, avgdl, window, k, prune, block_size)
 
     def kernel(batches):
-        carry: pd.DataFrame | None = None
         out: list[pd.DataFrame] = []
-
-        def run_group(g: pd.DataFrame) -> None:
-            res = group_topk(int(g["seg_id"].iloc[0]), *_group_arrays(g))
+        for (qid, seg_id), g in runs(batches, ("qid", "seg_id"), _RUN_COLS):
+            res = group_topk(seg_id, g)
             if res is None:
-                return
+                continue
             ids, scores, n_cand = res
-            out.append(
-                pd.DataFrame(
-                    {
-                        "qid": g["qid"].iloc[0],
-                        "doc_id": ids,
-                        "ms": scores,
-                        "n_cand": np.int64(n_cand),
-                    }
-                )
-            )
-
-        def emit():
-            nonlocal out
-            if out:
+            out.append(pd.DataFrame(
+                {"qid": qid, "doc_id": ids, "ms": scores, "n_cand": np.int64(n_cand)}
+            ))
+            if len(out) == 256:
                 yield pd.concat(out, ignore_index=True)
                 out = []
-
-        for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            q = pdf["qid"].to_numpy(object)
-            s = pdf["seg_id"].to_numpy(np.int64)
-            change = np.flatnonzero((q[1:] != q[:-1]) | (s[1:] != s[:-1])) + 1
-            starts = np.concatenate([[0], change])
-            ends = np.concatenate([change, [len(pdf)]])
-            # last run may continue in the next batch — carry it
-            for gi in range(len(starts) - 1):
-                run_group(pdf.iloc[starts[gi] : ends[gi]])
-            if len(starts):
-                carry = pdf.iloc[starts[-1] :]
-            yield from emit()
-        if carry is not None and len(carry):
-            run_group(carry)
-        yield from emit()
+        if out:
+            yield pd.concat(out, ignore_index=True)
 
     return kernel
 

@@ -10,7 +10,7 @@ vocab_size/total_postings/bytes_compressed — byte-level encode parity)
 plus warm top-150 WAND results on 50 derived queries.
 
 Usage: python scripts/compaction_bench.py [n_docs] [n_batches] [cores]
-       (default 3200000 8 16)
+       (default 400000 8; cores default to the CPU affinity, see get_spark)
 Prints one JSON line.
 """
 
@@ -25,7 +25,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def main(n_docs: int, n_batches: int, cores: int) -> None:
+def main(n_docs: int, n_batches: int, cores: int | None) -> None:
     from pyspark.sql import functions as F
 
     from legal_text_retrieval_spark.config import IndexParams, NORTH_STAR_BM25
@@ -44,7 +44,7 @@ def main(n_docs: int, n_batches: int, cores: int) -> None:
         pdf.to_parquet(corpus, index=False, row_group_size=20000)
         Path(corpus + ".ok").write_text("ok")
 
-    spark = get_spark(app_name="compaction-bench", master=f"local[{cores}]")
+    spark = get_spark(app_name="compaction-bench", master=f"local[{cores}]" if cores else None)
     docs = spark.read.parquet(corpus)
     params = IndexParams(segment_doc_window=1 << 15, bm25=NORTH_STAR_BM25)
     root = "/tmp/lts_compaction_bench"
@@ -110,7 +110,7 @@ def main(n_docs: int, n_batches: int, cores: int) -> None:
     print(json.dumps({
         "n_docs": n_docs,
         "n_batches": n_batches,
-        "cores": cores,
+        "cores": spark.sparkContext.defaultParallelism,
         "base_build_seconds": round(base_s, 1),
         "stream_ingest_seconds_total": round(ingest_s, 1),
         "compact_merged_seconds": round(compact_s, 1),
@@ -125,7 +125,7 @@ def main(n_docs: int, n_batches: int, cores: int) -> None:
 
 
 if __name__ == "__main__":
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 3_200_000
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
     b = int(sys.argv[2]) if len(sys.argv) > 2 else 8
-    c = int(sys.argv[3]) if len(sys.argv) > 3 else 16
+    c = int(sys.argv[3]) if len(sys.argv) > 3 else None
     main(n, b, c)

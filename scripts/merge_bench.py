@@ -6,7 +6,8 @@ halves vs (c) delete_docs of a 1% batch from the union index, and
 verify the merged manifest matches the rebuilt one.  Prints one JSON
 line.
 
-Usage: python scripts/merge_bench.py [n_docs] [cores]   (default 400000 16)
+Usage: python scripts/merge_bench.py [n_docs] [cores]
+       (default 400000 docs; cores default to the CPU affinity, see get_spark)
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
-def main(n_docs: int, cores: int) -> None:
+def main(n_docs: int, cores: int | None) -> None:
     from pyspark.sql import functions as F
 
     from legal_text_retrieval_spark.config import IndexParams, NORTH_STAR_BM25
@@ -38,7 +39,7 @@ def main(n_docs: int, cores: int) -> None:
         pdf.to_parquet(corpus, index=False, row_group_size=20000)
         Path(corpus + ".ok").write_text("ok")
 
-    spark = get_spark(app_name="merge-bench", master=f"local[{cores}]")
+    spark = get_spark(app_name="merge-bench", master=f"local[{cores}]" if cores else None)
     docs = spark.read.parquet(corpus)
     params = IndexParams(segment_doc_window=1 << 15, bm25=NORTH_STAR_BM25)
     root = tempfile.mkdtemp(prefix="lts_merge_bench_")
@@ -104,7 +105,7 @@ def main(n_docs: int, cores: int) -> None:
     )
     print(json.dumps({
         "n_docs": n_docs,
-        "cores": cores,
+        "cores": spark.sparkContext.defaultParallelism,
         "build_half_seconds": [round(build_a_s, 1), round(build_b_s, 1)],
         "rebuild_seconds": round(rebuild_s, 1),
         "merge_seconds": round(merge_s, 1),
@@ -132,5 +133,5 @@ def main(n_docs: int, cores: int) -> None:
 
 if __name__ == "__main__":
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 400_000
-    c = int(sys.argv[2]) if len(sys.argv) > 2 else 16
+    c = int(sys.argv[2]) if len(sys.argv) > 2 else None
     main(n, c)

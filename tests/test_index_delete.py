@@ -163,3 +163,17 @@ def test_delete_dataframe_input_bulk_path_parity(spark, tiny_docs, tmp_path):
         .toString()
     )
     assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+
+
+def test_delete_output_holds_no_filtered_copy(spark, tiny_docs, tmp_path):
+    """The filtered rows are a cached relation, not a staged directory:
+    neither delete shape leaves a second copy of the packed postings
+    (``_postings_filtered/``) next to ``postings/``."""
+    full = builder.build_index(spark, tiny_docs, str(tmp_path / "full"), PARAMS)
+    deleted = [3, 7, 64, 65, 130, 199]
+    del_df = spark.createDataFrame(pd.DataFrame({"doc_id": deleted}), "doc_id bigint")
+    for name, ids in (("by_list", deleted), ("by_df", del_df)):
+        out = delete_docs(spark, full.root, ids, str(tmp_path / name))
+        left = sorted(p.name for p in Path(out.root).iterdir())
+        assert "_postings_filtered" not in left, left
+        assert "postings" in left

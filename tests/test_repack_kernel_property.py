@@ -7,12 +7,12 @@ null, a random subset of its segment, or everything (one group is
 deleted whole).  The rows reach the kernel as several pandas batches,
 one cut always inside a multi-row group, so the open-group carry is
 exercised.  Every output row must equal ``_pack_group`` on the group's
-arrays merged and filtered independently; the broadcast id-array mode
-runs on the same rows; a doc_id in two rows of a group raises."""
+arrays merged and filtered independently; the id-list delete's input
+shape (each row's segment slice of one sorted id union, null where the
+slice is empty) runs on the same rows; a doc_id in two rows of a group
+raises."""
 
 from __future__ import annotations
-
-from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -94,11 +94,11 @@ def _expected(raw, deleted_of):
     return out
 
 
-def _run(pdf, cuts, deleted_bc=None):
+def _run(pdf, cuts):
     """The kernel over ``pdf`` cut into batches at the row offsets ``cuts``."""
     edges = [0, *sorted(set(cuts)), len(pdf)]
     batches = [pdf.iloc[a:b].reset_index(drop=True) for a, b in zip(edges, edges[1:]) if b > a]
-    out = list(_make_repack_fn(PARAMS, AVGDL, deleted_bc)(iter(batches)))
+    out = list(_make_repack_fn(PARAMS, AVGDL)(iter(batches)))
     return pd.concat(out, ignore_index=True).to_dict("records") if out else []
 
 
@@ -132,10 +132,13 @@ def test_repack_equals_independent_merge_filter_pack(seed, n_groups, extra_cuts)
     assert len(want) < n_groups  # the fully deleted group emits nothing
     _assert_rows_equal(_run(pdf, cuts), want)
 
-    # id-list delete: one sorted broadcast array, sliced per segment
+    # id-list delete: one sorted id union, sliced per segment into each
+    # row's _deleted list (null where the segment has no deleted id)
     union = np.unique(np.concatenate([r[5] for r in raw if r[5] is not None]))
     want_bc = _expected(raw, lambda seg_id, dels: union.tolist())
-    got_bc = _run(pdf.drop(columns="_deleted"), cuts, SimpleNamespace(value=union))
+    lo, hi = (np.searchsorted(union, pdf["seg_id"].to_numpy() * WINDOW + o) for o in (0, WINDOW))
+    per_seg = [union[a:b] if b > a else None for a, b in zip(lo, hi)]
+    got_bc = _run(pdf.assign(_deleted=per_seg), cuts)
     _assert_rows_equal(got_bc, want_bc)
 
     # merge / compaction: no deletes at all
