@@ -151,6 +151,19 @@ def fold_query(params, qtf: dict, idf: dict) -> tuple[float, list]:
     return qconst, [t for t in order if idf.get(t, 0.0) != 0.0]
 
 
+def scatter_add(score: np.ndarray, seen: np.ndarray, slots: np.ndarray, w: float,
+                part: np.ndarray) -> None:
+    """``score[slots] += w · part`` and mark ``slots`` seen: one term's
+    pass over a dense slot-indexed accumulator, ``slots`` unique within
+    the term.  Each (doc, term) is one float add, so a scorer that calls
+    this term by term in ascending term order folds every doc's score in
+    the relational path's order, bit for bit.  The one accumulation step
+    of the numpy scorers: serving's ``_score_slice`` and the WAND
+    kernel."""
+    score[slots] += w * part
+    seen[slots] = True
+
+
 def topk_order(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
     """Indices of the top ``min(k, len(ids))`` rows, ordered by score
     descending, then doc_id descending among ties — the reference's

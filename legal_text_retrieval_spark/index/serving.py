@@ -226,8 +226,7 @@ class LocalIndexServer:
             else:
                 i0, i1 = np.searchsorted(tp.slots, (lo, hi))
                 slots, contribs = tp.slots[i0:i1] - lo, tp.contribs[i0:i1]
-            score[slots] += w * contribs  # doc_ids unique per term
-            matched[slots] = True
+            codec.scatter_add(score, matched, slots, w, contribs)
         return score, matched
 
     def query(self, query_text: str, k: int) -> list[tuple[int, float]]:

@@ -125,13 +125,11 @@ def test_chunked_corpus_guards_id_space(spark):
         chunked_corpus(docs, size=30, stride=15).collect()
 
 
-def test_query_scope_returns_storage_to_baseline(spark, tiny_docs, tiny_queries):
+def test_query_scope_returns_storage_to_baseline(spark, tiny_docs, tiny_queries, tmp_path):
     """VERDICT r3 next #8: wrapping a query batch in query_scope must
     drop the operator-internal caches on exit (storage back to the
     pre-batch level) while keep= relations re-register, and a live
     FulltextIndex handle must re-pin its caches on next access."""
-    import tempfile
-
     from legal_text_retrieval_spark.config import BM25Params, IndexParams
     from legal_text_retrieval_spark.index import builder, wand
     from legal_text_retrieval_spark.operators import bm25 as B
@@ -141,7 +139,7 @@ def test_query_scope_returns_storage_to_baseline(spark, tiny_docs, tiny_queries)
     tiny_docs.cache().count()  # re-pin the session fixture
     jsc = spark.sparkContext._jsc
 
-    root = tempfile.mkdtemp(prefix="lts_scope_idx_")
+    root = str(tmp_path / "lts_scope_idx")
     params = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
     paths = builder.build_index(spark, tiny_docs, root, params)
     index = wand.FulltextIndex.load(spark, paths.root)

@@ -109,6 +109,38 @@ def test_wand_equals_exhaustive_bitwise(spark, index, tiny_queries):
     assert (a["score"].values.view("int64") == b["score"].values.view("int64")).all()
 
 
+@pytest.mark.parametrize("per_core", [0, 2])
+def test_bucket_plans_match_exhaustive_and_relational(
+    spark, index, tiny_docs, tiny_queries_pdf, per_core
+):
+    """One query over the four-segment index gets B = 1 < P buckets: its
+    segments spread over the tasks and a window re-ranks the per-task
+    top-k lists.  2·P queries fill every bucket (B == P): each task holds
+    all segments of its queries, the kernel's ranks are final, and the
+    executed plan has no Window.  Both equal exhaustive mode and the
+    relational plan bit for bit."""
+    n_parts = spark.sparkContext.defaultParallelism
+    assert index.manifest["n_docs"] > 3 * PARAMS.segment_doc_window
+    n = max(1, per_core * n_parts)
+    queries = spark.createDataFrame(tiny_queries_pdf.iloc[:n])
+    got_df = wand.query_topk(index, queries, k=10)
+    plan = got_df._jdf.queryExecution().executedPlan().toString()
+    assert ("Window" in plan) == (n < n_parts), plan
+
+    def _sorted(df):
+        return df.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+
+    got = _sorted(got_df)
+    assert len(got) == n * 10
+    for want in (
+        _sorted(wand.query_topk(index, queries, k=10, mode="exhaustive")),
+        _sorted(B.bm25_topk(tiny_docs, queries, PARAMS.bm25, k=10, score_round=None)),
+    ):
+        assert got["query_id"].tolist() == want["query_id"].tolist()
+        assert got["doc_id"].tolist() == want["doc_id"].tolist()
+        assert (got["score"].values.view("int64") == want["score"].values.view("int64")).all()
+
+
 def test_wand_matches_numpy_oracle(spark, index, tiny_corpus_pdf, tiny_queries_pdf, tiny_queries):
     from legal_text_retrieval_spark.oracle.reference_scorer import (
         RefBM25,

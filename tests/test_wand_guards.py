@@ -3,6 +3,8 @@ driver-collect size guard and the okapi negative-ε precondition."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -24,18 +26,23 @@ def test_term_id_guard_semi_join_same_results(
     spark, tiny_docs, tiny_queries, tmp_path, monkeypatch
 ):
     """Above TERM_ID_PUSHDOWN_LIMIT the postings restriction switches
-    from an .isin literal list to a broadcast LEFT SEMI join — results
-    must be identical."""
+    from an IN literal list (plus a map literal of each term's buckets)
+    to a broadcast join on term_id of the (term_id, bucket) placement
+    table — results must be identical."""
     from legal_text_retrieval_spark.index import wand
 
     index = _build(spark, tiny_docs, tmp_path / "idx")
-    want = sorted(
-        map(tuple, wand.query_topk(index, tiny_queries, k=5, score_round=6).collect())
-    )
+    want_df = wand.query_topk(index, tiny_queries, k=5, score_round=6)
+    # the optimizer turns a long IN list into INSET
+    literal_list = re.compile(r"term_id#\d+L IN(SET)? ")
+    assert literal_list.search(want_df._jdf.queryExecution().executedPlan().toString())
+    want = sorted(map(tuple, want_df.collect()))
     monkeypatch.setattr(wand, "TERM_ID_PUSHDOWN_LIMIT", 1)
     got_df = wand.query_topk(index, tiny_queries, k=5, score_round=6)
     plan = got_df._jdf.queryExecution().executedPlan().toString()
-    assert "LeftSemi" in plan, plan
+    assert re.search(r"BroadcastHashJoin \[term_id#\d+L\], \[term_id#\d+L\]", plan), plan
+    assert re.search(r"LocalTableScan \[term_id#\d+L, bucket#\d+\]", plan), plan
+    assert not literal_list.search(plan), plan
     assert sorted(map(tuple, got_df.collect())) == want
 
 

@@ -14,13 +14,14 @@ from legal_text_retrieval_spark.config import IndexParams
 from legal_text_retrieval_spark.index import builder, wand
 
 # jobs of one measured warm batch, each counted in fresh sessions
-# (local[4], 8 shuffle partitions).  No query can pad: 8, measured
-# three times (20 while the batch was prepared by Spark-side collects
-# and a pad probe).  k > n_docs, so every query takes the pad branch:
-# 30, measured three times (32 before).  More than these means an extra
-# action crept into the batch.
-MAX_WARM_BATCH_JOBS = 8
-MAX_WARM_PAD_BATCH_JOBS = 30
+# (local[4], 8 shuffle partitions).  No query can pad: 4, measured
+# three times (8 while the plan broadcast-joined a query-term table and
+# merged per-segment top-k lists in a window; 20 while the batch was
+# prepared by Spark-side collects and a pad probe).  k > n_docs, so
+# every query takes the pad branch: 26, measured three times (30, 32
+# before).  More than these means an extra action crept into the batch.
+MAX_WARM_BATCH_JOBS = 4
+MAX_WARM_PAD_BATCH_JOBS = 26
 K = 10
 
 

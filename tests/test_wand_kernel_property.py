@@ -3,13 +3,17 @@ for randomized posting segments and query weights, pruned evaluation
 must equal exhaustive evaluation bit-for-bit (the SURVEY §5.3 safety
 property, without Spark in the loop).  The rows reach the production
 streaming kernel split into two Arrow-style batches at a drawn point,
-so the carry that stitches a group across batches is exercised too:
-the pruned run is split, the exhaustive reference is one batch.  A
-second property runs the kernel with a 2^20-doc window over a few
-hundred docs (the accumulator is sized by the docs' span, not the
-window) against an independent per-doc reference."""
+so the carry that stitches a run across batches is exercised too: the
+pruned run is split, the exhaustive reference is one batch.  A second
+property runs the kernel with a 2^20-doc window over a few hundred docs
+(the accumulator is sized by the docs' span, not the window) against an
+independent per-doc reference.  Another puts several queries that
+share terms into one bucket: each must score bit-equal to running
+alone, and each posting row is decoded exactly once."""
 
 from __future__ import annotations
+
+from unittest import mock
 
 import numpy as np
 import pandas as pd
@@ -49,7 +53,6 @@ def _row(term_id, seg_id, ids, tfs, dls, qtf, idf, window):
     bl = [int(ids[min((i + 1) * BLOCK, n_docs) - 1]) for i in range(nb)]
     bm = [float(tfp[i * BLOCK : (i + 1) * BLOCK].max()) for i in range(nb)]
     return {
-        "qid": "q",
         "seg_id": seg_id,
         "term_id": term_id,
         "qtf": qtf,
@@ -64,11 +67,17 @@ def _row(term_id, seg_id, ids, tfs, dls, qtf, idf, window):
     }
 
 
-def _run(pdf, split, k, prune, window=WINDOW):
-    """The stream kernel over ``pdf`` cut into batches at row ``split``
-    (a cut at either end leaves one batch)."""
-    kernel = _make_stream_kernel(PARAMS, AVGDL, window, k, prune=prune, block_size=BLOCK)
-    batches = [b.copy() for b in (pdf.iloc[:split], pdf.iloc[split:]) if len(b)]
+def _run(pdf, split, k, prune, window=WINDOW, plan=None):
+    """The stream kernel over ``pdf``'s posting rows, all placed in
+    bucket 0 and cut into batches at row ``split`` (a cut at either end
+    leaves one batch).  The rows lose their qtf/idf columns: by default
+    the bucket plan holds one query "q" that weights each row's term by
+    the row's qtf·idf."""
+    if plan is None:
+        plan = [[("q", "q", 0.0, [(int(r.term_id), r.qtf * r.idf) for r in pdf.itertuples()])]]
+    rows = pdf.drop(columns=["qtf", "idf"]).assign(bucket=0)
+    kernel = _make_stream_kernel(PARAMS, AVGDL, window, k, prune, plan, block_size=BLOCK)
+    batches = [b.copy() for b in (rows.iloc[:split], rows.iloc[split:]) if len(b)]
     return pd.concat(kernel(iter(batches)), ignore_index=True)
 
 
@@ -185,3 +194,51 @@ def test_tied_blocks_at_theta_match_reference(seed, n_terms, k, split):
         assert out["ms"].to_numpy().view("int64").tolist() == want_bits
         n_cand = int(out["n_cand"].iloc[0])
         assert n_cand == want_cand or (prune and want_cand >= k and n_cand >= k)
+
+
+@given(
+    seed=st.integers(0, 10_000),
+    n_terms=st.integers(2, 8),
+    n_queries=st.integers(2, 5),
+    k=st.sampled_from([1, 3, 10, 50]),
+    split=st.integers(0, 16),
+    prune=st.booleans(),
+)
+@settings(max_examples=100, deadline=None)
+def test_bucket_queries_share_decode_and_match_solo(seed, n_terms, n_queries, k, split, prune):
+    """Queries sharing terms in one bucket, over two segments: each
+    query's ranks and score bits equal its run alone in a bucket of its
+    own, and the shared run decodes every input row exactly once."""
+    rng = np.random.default_rng(seed)
+    rows = [
+        _segment_row(rng, t, seg, int(rng.integers(1, WINDOW)))
+        for seg in (2, 5)
+        for t in range(n_terms)
+    ]
+    pdf = pd.DataFrame(rows)
+    queries = []
+    for q in range(n_queries):
+        terms = np.sort(rng.choice(n_terms, size=int(rng.integers(1, n_terms + 1)), replace=False))
+        queries.append((f"q{q}", q, 0.5 * q, [(int(t), float(rng.uniform(0.05, 6.0))) for t in terms]))
+    used = {t for *_, terms in queries for t, _ in terms}
+    shared = pdf[pdf["term_id"].isin(used)].reset_index(drop=True)
+
+    calls = []
+    unpack = codec.unpack_row
+
+    def counting(*args):
+        calls.append(args)
+        return unpack(*args)
+
+    with mock.patch.object(codec, "unpack_row", counting):
+        out = _run(shared, split, k, prune, plan=[queries])
+    assert len(calls) == len(shared)
+
+    for qid, query_id, qconst, terms in queries:
+        mine = pdf[pdf["term_id"].isin([t for t, _ in terms])].reset_index(drop=True)
+        solo = _run(mine, 0, k, prune, plan=[[(qid, query_id, qconst, terms)]])
+        got = out[out["qid"] == qid].reset_index(drop=True)
+        assert got["doc_id"].tolist() == solo["doc_id"].tolist()
+        assert got["rank"].tolist() == list(range(1, len(got) + 1))
+        assert (got["ms"].to_numpy().view("int64") == solo["ms"].to_numpy().view("int64")).all()
+        assert (got["query_id"] == query_id).all() and (got["qconst"] == qconst).all()
