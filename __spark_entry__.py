@@ -107,9 +107,10 @@ def build_or_load_index(spark, sf_dir: str):
     from legal_text_retrieval_spark.index.wand import FulltextIndex
 
     # bump the version segment whenever the index layout changes
-    # (v3: dl-carrying termfreq stage + max_group lineage column — a
-    # stale v2 dir's intermediates would fail the resume path)
-    root = f"/tmp/lts_index_v3/{Path(sf_dir.rstrip('/')).name}"
+    # (v4: postings without block metadata; v3: dl-carrying termfreq
+    # stage + max_group lineage column — a stale older dir's
+    # intermediates would fail the resume path)
+    root = f"/tmp/lts_index_v4/{Path(sf_dir.rstrip('/')).name}"
     docs = _docs(spark, sf_dir)
     paths = build_index(
         spark, docs, root, IndexParams(segment_doc_window=1 << 14, bm25=NORTH_STAR_BM25)
@@ -119,7 +120,7 @@ def build_or_load_index(spark, sf_dir: str):
 
 def _q_bm25plus_topk_indexed(spark, sf_dir):
     """Same query as bm25plus_topk but served from the compressed
-    posting index via the block-max WAND kernel — bit-identical scores
+    posting index via the query_topk kernel — bit-identical scores
     (tests/test_index_engine.py), same DuckDB oracle."""
     from legal_text_retrieval_spark.index.wand import query_topk
     from legal_text_retrieval_spark.sources import corpus as C
@@ -136,7 +137,7 @@ def _q_bm25okapi_topk_indexed(spark, sf_dir):
     from legal_text_retrieval_spark.index.wand import FulltextIndex, query_topk
     from legal_text_retrieval_spark.sources import corpus as C
 
-    root = f"/tmp/lts_index_v3_okapi/{Path(sf_dir.rstrip('/')).name}"
+    root = f"/tmp/lts_index_v4_okapi/{Path(sf_dir.rstrip('/')).name}"
     docs = _docs(spark, sf_dir)
     paths = build_index(
         spark, docs, root, IndexParams(segment_doc_window=1 << 14, bm25=_OKAPI)
@@ -147,8 +148,8 @@ def _q_bm25okapi_topk_indexed(spark, sf_dir):
 
 def _q_bm25_merged_topk(spark, sf_dir):
     """Split the corpus by doc_id parity, build a packed index per
-    half, MERGE them (index/merge.py: term-dict realignment, block-max
-    recompute vs the union avgdl, shared-segment decode-merge) and
+    half, MERGE them (index/merge.py: term-dict realignment, idf
+    recompute vs the union n_docs, shared-segment decode-merge) and
     serve the standard query batch from the merged index.  Same DuckDB
     oracle as bm25plus_topk — the gate proves merged == rebuilt."""
     from pyspark.sql import functions as F
@@ -159,7 +160,7 @@ def _q_bm25_merged_topk(spark, sf_dir):
     from legal_text_retrieval_spark.index.wand import FulltextIndex, query_topk
     from legal_text_retrieval_spark.sources import corpus as C
 
-    base = f"/tmp/lts_index_v3_merged/{Path(sf_dir.rstrip('/')).name}"
+    base = f"/tmp/lts_index_v4_merged/{Path(sf_dir.rstrip('/')).name}"
     docs = _docs(spark, sf_dir)
     params = IndexParams(segment_doc_window=1 << 14, bm25=NORTH_STAR_BM25)
     pa = build_index(spark, docs.filter(F.col("doc_id") % 2 == 0), f"{base}/even", params)
@@ -181,7 +182,7 @@ def _q_bm25_deleted_topk(spark, sf_dir):
     from legal_text_retrieval_spark.index.wand import FulltextIndex, query_topk
     from legal_text_retrieval_spark.sources import corpus as C
 
-    base = f"/tmp/lts_index_v3_deleted/{Path(sf_dir.rstrip('/')).name}"
+    base = f"/tmp/lts_index_v4_deleted/{Path(sf_dir.rstrip('/')).name}"
     docs = _docs(spark, sf_dir)
     full = build_or_load_index(spark, sf_dir)
     doomed = [
@@ -216,7 +217,7 @@ def _q_bm25_upserted_topk(spark, sf_dir):
     # the builds via build_index's input fingerprint
     import os
 
-    base = f"/tmp/lts_index_v3_upserted/{os.getpid()}/{Path(sf_dir.rstrip('/')).name}"
+    base = f"/tmp/lts_index_v4_upserted/{os.getpid()}/{Path(sf_dir.rstrip('/')).name}"
     docs = _docs(spark, sf_dir)
     params = IndexParams(segment_doc_window=1 << 14, bm25=NORTH_STAR_BM25)
     overlap = F.col("doc_id") % 8 == 0
@@ -264,7 +265,7 @@ def _q_bm25_compacted_topk(spark, sf_dir):
         # rerun must land in a fresh dir (the within-process rerun
         # reuses the memoized compacted root instead)
         base = (
-            f"/tmp/lts_index_v3_compacted/{os.getpid()}/"
+            f"/tmp/lts_index_v4_compacted/{os.getpid()}/"
             f"{Path(sf_dir.rstrip('/')).name}_{uuid.uuid4().hex[:8]}"
         )
         params = IndexParams(segment_doc_window=1 << 14, bm25=NORTH_STAR_BM25)

@@ -52,7 +52,7 @@ def main() -> None:
         lambda: B.bm25_topk(docs, queries_df, NORTH_STAR_BM25, k=150).count(),
     )
 
-    # packed-index path: SPIMI build (fresh) + block-max WAND queries
+    # packed-index path: SPIMI build (fresh) + query_topk batches
     import shutil
     import tempfile
 

@@ -6,10 +6,9 @@ Re-expresses the lexical-ranking stage of phuongnm94/legal_text_retrieval
 
 - SPIMI-style inverted-index construction over an Iceberg-shaped corpus
   ``(repo, path, commit, lang, content)`` with delta+varint-compressed,
-  docID-sorted posting blocks and per-block max-score metadata
-  (``index/``).
-- Top-k BM25 (Plus / Okapi variants) query evaluation with block-max
-  WAND pruning, rank-identical to the reference scorer
+  docID-sorted posting segments (``index/``).
+- Top-k BM25 (Plus / Okapi variants) query evaluation over the
+  compressed postings, rank-identical to the reference scorer
   (/root/reference/src/custom_rank_bm25.py:136-160).
 - A fully relational (DataFrame-only) scoring path used as the
   correctness oracle surface (``operators/``), mirrored 1:1 by ANSI-SQL
@@ -20,7 +19,7 @@ Re-expresses the lexical-ranking stage of phuongnm94/legal_text_retrieval
 
 No per-row Python UDFs anywhere: built-in Spark SQL expressions for all
 relational logic; Arrow-vectorized pandas UDFs (mapInPandas /
-applyInPandas) only for the posting codec and the WAND kernel.
+applyInPandas) only for the posting codec and the query kernel.
 """
 
 __version__ = "0.1.0"

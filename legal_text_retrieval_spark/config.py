@@ -52,7 +52,6 @@ REFERENCE_BM25 = BM25Params(k1=1.5, b=0.75, delta=1.0, variant="plus")
 class IndexParams:
     """Physical layout of the inverted index (SURVEY.md §7 M2)."""
 
-    block_size: int = 128          # docs per posting block (block-max WAND unit)
     segment_doc_window: int = 1 << 20  # docID range per posting segment row;
     # bounds the size of any single shuffle group so high-df ("def",
     # "import") terms can never create a hot reducer: the shuffle key is

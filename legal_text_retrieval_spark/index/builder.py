@@ -7,17 +7,18 @@ Physical design, chosen for 10^12-file scale:
   never exceeds the doc window regardless of term df — high-df code
   terms ("def", "import") can never create a hot reducer.  This IS the
   skew handling demanded by the north rule: the salt is the docID
-  range, which (unlike a random salt) is also exactly what block-max
-  WAND wants — docID-sorted, range-aligned segments that can be merged
-  streamingly at query time.
+  range, which (unlike a random salt) also gives the query kernel
+  docID-sorted, range-aligned segments it scores with one segment-span
+  accumulator each.
 - **Two-phase agg for tf** (Catalyst partial+final) — the SPIMI
   per-partition "local run" is the partial hash agg; the shuffle-merge
   by term is the final agg + segment pack.
 - **Arrow-vectorized pack kernel only at the very end**: one streaming
   ``mapInPandas`` over the (term, segment)-sorted rows walks each
   group as a contiguous run (``runs``) and packs it with
-  ``codec.pack_row`` — delta+varint docIDs/tfs/dls plus per-block max
-  scores.  No per-row Python.
+  ``codec.pack_row`` — delta+varint docIDs/tfs/dls.  No per-row
+  Python, and no score-dependent field: packing needs only the segment
+  window, never the BM25 params or avgdl.
 - **Checkpoint-resumable**: each stage writes Parquet with _SUCCESS;
   re-running skips completed stages (north_rule resumability).
 - **Integrity**: per-row sha256(content) stored at ingest and verified
@@ -48,21 +49,22 @@ from . import codec
 
 # Single source of truth for the on-disk index layout version: every
 # IndexWriter stamps it and read_manifest requires it, so the writers
-# and the readers cannot drift.  Bump on any layout change (v3 =
-# min_idf + block-max layout).  EPS_FOLD names the okapi ε-floor fold
-# algorithm: indexes built under the round-1 flat term-ordered fold
-# carry no eps_fold key and must be rebuilt, not trusted (the
-# md5-bucketed two-level fold changes ε in the last ulps, so scores
-# and oracle hashes are version-incompatible).
-FORMAT_VERSION = 3
+# and the readers cannot drift.  Bump on any layout change (v4 =
+# postings without block metadata; v3 = min_idf + block metadata).
+# EPS_FOLD names the okapi ε-floor fold algorithm: indexes built under
+# the round-1 flat term-ordered fold carry no eps_fold key and must be
+# rebuilt, not trusted (the md5-bucketed two-level fold changes ε in
+# the last ulps, so scores and oracle hashes are version-incompatible).
+FORMAT_VERSION = 4
 EPS_FOLD = "md5-bucketed-1024-two-level"
 
 
 def read_manifest(root: str, allow_legacy: bool = False) -> tuple[dict, IndexParams]:
     """The one manifest reader: (manifest, layout params) of the index
     at ``root``.  Refuses an index without the current format_version
-    and eps_fold — okapi ε-fold provenance and block-max layout cannot
-    be trusted there — unless ``allow_legacy``, which warns instead."""
+    and eps_fold — okapi ε-fold provenance and the postings layout
+    cannot be trusted there — unless ``allow_legacy``, which warns
+    instead."""
     manifest = json.loads(Path(IndexPaths(root).manifest).read_text())
     fv = manifest.get("format_version")
     if fv != FORMAT_VERSION or manifest.get("eps_fold") != EPS_FOLD:
@@ -70,7 +72,7 @@ def read_manifest(root: str, allow_legacy: bool = False) -> tuple[dict, IndexPar
             f"index at {root}: format_version={fv!r}, eps_fold="
             f"{manifest.get('eps_fold', 'MISSING')!r} — expected "
             f"format_version={FORMAT_VERSION} with eps_fold={EPS_FOLD!r}; "
-            "okapi ε-fold provenance and block-max layout cannot be trusted. "
+            "okapi ε-fold provenance and postings layout cannot be trusted. "
             "Rebuild the index, or pass allow_legacy=True to open anyway."
         )
         if not allow_legacy:
@@ -81,9 +83,7 @@ def read_manifest(root: str, allow_legacy: bool = False) -> tuple[dict, IndexPar
     p = manifest["params"]
     bm25 = BM25Params(k1=p["k1"], b=p["b"], delta=p["delta"],
                       variant=p["variant"], epsilon=p["epsilon"])
-    return manifest, IndexParams(block_size=int(p["block_size"]),
-                                 segment_doc_window=int(p["segment_doc_window"]),
-                                 bm25=bm25)
+    return manifest, IndexParams(segment_doc_window=int(p["segment_doc_window"]), bm25=bm25)
 
 
 POSTINGS_SCHEMA = T.StructType(
@@ -95,10 +95,6 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("doc_ids_enc", T.BinaryType()),
         T.StructField("tfs_enc", T.BinaryType()),
         T.StructField("dls_enc", T.BinaryType()),
-        T.StructField("block_first", T.ArrayType(T.LongType())),
-        T.StructField("block_last", T.ArrayType(T.LongType())),
-        T.StructField("block_max_tfpart", T.ArrayType(T.DoubleType())),
-        T.StructField("seg_max_tfpart", T.DoubleType()),
         T.StructField("enc_bytes", T.LongType()),
     ]
 )
@@ -177,8 +173,7 @@ class IndexWriter:
         self.manifest: dict = {
             "format_version": FORMAT_VERSION,
             "eps_fold": EPS_FOLD,
-            "params": {**asdict(params.bm25), "block_size": params.block_size,
-                       "segment_doc_window": params.segment_doc_window},
+            "params": {**asdict(params.bm25), "segment_doc_window": params.segment_doc_window},
             "stages": {},
             **provenance,
         }
@@ -191,11 +186,10 @@ class IndexWriter:
             else:
                 self.resume = False
 
-    def set_stats(self, n_docs: int, total_tokens: int) -> float:
-        """Record the corpus scalars; returns avgdl."""
-        avgdl = float(total_tokens) / n_docs
-        self.manifest.update(n_docs=int(n_docs), total_tokens=int(total_tokens), avgdl=avgdl)
-        return avgdl
+    def set_stats(self, n_docs: int, total_tokens: int) -> None:
+        """Record the corpus scalars and the avgdl they give."""
+        self.manifest.update(n_docs=int(n_docs), total_tokens=int(total_tokens),
+                             avgdl=float(total_tokens) / n_docs)
 
     def stage(self, name: str, path: str, producer) -> DataFrame:
         t0 = time.time()
@@ -215,9 +209,9 @@ class IndexWriter:
             dfreq(), m["n_docs"], self.params, m["total_tokens"], self.paths.root))
 
     def record_min_idf(self, dictionary: DataFrame) -> None:
-        # min_idf < 0 (okapi negative eps floor) invalidates WAND's
-        # block-max bounds — recorded so the query path switches to
-        # exhaustive decode + all-query pads (wand.query_topk)
+        # min_idf < 0 (okapi negative eps floor) lets a matched doc score
+        # below an unmatched one — recorded so the query path keeps every
+        # candidate and pads every query (wand.query_topk)
         self.manifest["min_idf"] = float(dictionary.agg(F.min("idf")).collect()[0][0])
 
     def finish(self) -> IndexPaths:
@@ -295,17 +289,14 @@ def runs(batches, keys: tuple, cols: tuple):
         yield tuple(carry[c][0] for c in keys), {c: carry[c] for c in cols}
 
 
-def _pack_group(term_id, seg_id, doc_ids, tfs, dls, params: IndexParams, avgdl: float):
+def _pack_group(term_id, seg_id, doc_ids, tfs, dls, window: int):
     """Pack one (term, segment) group of docID-sorted postings."""
-    p = params.bm25
-    tfp = codec.tf_part(tfs, dls, p.k1, p.b, avgdl, p.variant)
     return {
         "build_part": -1,  # stamped by _emit
         "term_id": int(term_id),
         "seg_id": int(seg_id),
         "n_docs": len(doc_ids),
-        **codec.pack_row(doc_ids, tfs, dls, int(seg_id) * params.segment_doc_window,
-                         params.block_size, tfp),
+        **codec.pack_row(doc_ids, tfs, dls, int(seg_id) * window),
     }
 
 
@@ -329,7 +320,7 @@ def _emit(rows):
 _GROUP = ("term_id", "seg_id")
 
 
-def _make_pack_fn(params: IndexParams, avgdl: float):
+def _make_pack_fn(window: int):
     """Streaming pack kernel for mapInPandas over partitions that are
     partitioned by (term_id, seg_id) and sorted by (term_id, seg_id,
     doc_id): each group is one contiguous run (``runs``).  No pandas
@@ -337,14 +328,14 @@ def _make_pack_fn(params: IndexParams, avgdl: float):
 
     def pack(batches):
         return _emit(
-            _pack_group(*key, g["doc_id"], g["tf"], g["dl"], params, avgdl)
+            _pack_group(*key, g["doc_id"], g["tf"], g["dl"], window)
             for key, g in runs(batches, _GROUP, ("doc_id", "tf", "dl"))
         )
 
     return pack
 
 
-def _make_repack_fn(params: IndexParams, avgdl: float):
+def _make_repack_fn(window: int):
     """The one repack kernel: merge, delete and compaction rewrite
     packed rows only through it.  Rows arrive grouped by contiguous
     (term_id, seg_id) — merge/compaction range-partition and sort them,
@@ -353,9 +344,7 @@ def _make_repack_fn(params: IndexParams, avgdl: float):
     no column = none) — dropped by one searchsorted membership test; a
     group's rows are concatenated, doc_id-sorted when there is more
     than one (a duplicate doc_id is a hard error: sources must cover
-    disjoint docs) and re-packed with maxima against ``avgdl``.  Fully
-    deleted groups emit nothing."""
-    window = params.segment_doc_window
+    disjoint docs) and re-packed.  Fully deleted groups emit nothing."""
     cols = ("doc_ids_enc", "tfs_enc", "dls_enc", "_deleted")
 
     def repack_group(key, g) -> list:
@@ -375,7 +364,7 @@ def _make_repack_fn(params: IndexParams, avgdl: float):
                 f"duplicate doc_id in merged group (term_id={key[0]}, "
                 f"seg_id={key[1]}): source indexes must cover disjoint docs"
             )
-        return [_pack_group(*key, d, tf, dl, params, avgdl)] if len(d) else []
+        return [_pack_group(*key, d, tf, dl, window)] if len(d) else []
 
     def kernel(batches):
         batches = (b if "_deleted" in b else b.assign(_deleted=None) for b in batches)
@@ -393,14 +382,14 @@ def range_clustered(rows: DataFrame) -> DataFrame:
     ).sortWithinPartitions("term_id", "seg_id")
 
 
-def repack(rows: DataFrame, params: IndexParams, avgdl: float) -> DataFrame:
+def repack(rows: DataFrame, window: int) -> DataFrame:
     """The merge/compaction plan: range-partition the PRE-kernel packed
     rows, then run the repack kernel once.  A range partitioner after
     the kernel would sample its child plan and so run the kernel twice;
     sampling here re-runs only the map-side remap joins (guide §2.4)."""
     return range_clustered(
         rows.select("term_id", "seg_id", "doc_ids_enc", "tfs_enc", "dls_enc")
-    ).mapInPandas(_make_repack_fn(params, avgdl), POSTINGS_SCHEMA)
+    ).mapInPandas(_make_repack_fn(window), POSTINGS_SCHEMA)
 
 
 def dictionary_from_dfreq(
@@ -629,11 +618,11 @@ def build_index(
             lambda: termfreq.groupBy("doc_id").agg(F.max("dl").alias("dl")),
         )
         n_docs, total_tokens = docstats.agg(F.count("*"), F.sum("dl")).collect()[0]
-        avgdl = w.set_stats(n_docs, total_tokens)
+        w.set_stats(n_docs, total_tokens)
 
         # -- stage: dictionary (term → dense term_id in lexical order + df + idf)
         dictionary = w.dictionary(lambda: termfreq.groupBy("term").agg(F.count("*").alias("df")))
-        # -- stage: postings (segment-partitioned, packed, block-max metadata)
+        # -- stage: postings (segment-partitioned, packed)
         # Pack-shuffle partition count scales with posting volume
         # (total_tokens is an exact upper bound on postings — Σ dl is
         # already in hand), bounding per-partition sort/pack state instead
@@ -671,7 +660,7 @@ def build_index(
             return (
                 flat.repartitionByRange(pack_parts, "term_id", "seg_id")
                 .sortWithinPartitions("term_id", "seg_id", "doc_id")
-                .mapInPandas(_make_pack_fn(params, avgdl), POSTINGS_SCHEMA)
+                .mapInPandas(_make_pack_fn(params.segment_doc_window), POSTINGS_SCHEMA)
             )
 
         # the tiny min_idf aggregate is independent of the pack shuffle,

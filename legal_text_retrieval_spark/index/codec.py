@@ -10,8 +10,10 @@ Layout per posting segment (one row of the postings table):
 - ``doc_ids``: strictly increasing int64 → delta vs predecessor
   (first delta vs the segment's base docID) → LEB128.
 - ``tfs`` / ``dls``: positive int64 → LEB128 (no delta).
-- blocks of ``block_size`` postings carry (first_doc, last_doc,
-  max_tf_part) metadata for block-max WAND pruning.
+
+A row holds no score metadata: nothing in it depends on the BM25
+parameters or the corpus-global avgdl, so rows are rewritten (merge,
+delete, compaction) without re-deriving any bound.
 
 ``pack_row`` and ``unpack_row`` are the only owners of that row
 format: every kernel that writes a posting row (build pack, repack)
@@ -90,24 +92,16 @@ def decode_docids(buf: bytes, base: int) -> np.ndarray:
     return out + base
 
 
-def pack_row(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, base: int,
-             block_size: int, tfp: np.ndarray) -> dict:
+def pack_row(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, base: int) -> dict:
     """Encode one posting row of ``len(doc_ids) ≥ 1`` docID-sorted
-    postings: the three encoded fields, per-block (first doc, last doc,
-    max ``tfp``) metadata over blocks of ``block_size`` postings, the
-    row maximum and the encoded byte count."""
+    postings: the three encoded fields and their byte count."""
     ids_enc = encode_docids(doc_ids, base)
     tfs_enc = encode_varint(tfs)
     dls_enc = encode_varint(dls)
-    starts = np.arange(0, len(doc_ids), block_size)
     return {
         "doc_ids_enc": ids_enc,
         "tfs_enc": tfs_enc,
         "dls_enc": dls_enc,
-        "block_first": doc_ids[starts].tolist(),
-        "block_last": doc_ids[np.append(starts[1:], len(doc_ids)) - 1].tolist(),
-        "block_max_tfpart": np.maximum.reduceat(tfp, starts).tolist(),
-        "seg_max_tfpart": float(tfp.max()),
         "enc_bytes": len(ids_enc) + len(tfs_enc) + len(dls_enc),
     }
 

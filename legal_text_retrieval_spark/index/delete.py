@@ -7,9 +7,9 @@ the build shuffle:
 
 - **postings**: one pass of the one repack kernel
   (builder._make_repack_fn — shared with merge and compaction) over
-  the packed rows — decode, mask out deleted doc_ids, re-pack against
-  the NEW avgdl (maxima recompute is mandatory: avgdl moves when docs
-  leave).  Both input shapes group the ids into per-segment sorted
+  the packed rows — decode, mask out deleted doc_ids, re-pack (a row
+  holds nothing that depends on avgdl, so the new avgdl lands only in
+  the manifest).  Both input shapes group the ids into per-segment sorted
   ``_deleted`` lists joined to the packed rows on seg_id, so per-row
   state is bounded by segment_doc_window: batch deletes (iterable
   input) broadcast the lists and stay map-only; bulk deletes
@@ -138,7 +138,7 @@ def delete_docs(
         )
         w = IndexWriter(spark, out_dir, params, resume, input_fp,
                         deleted_from=root, n_deleted=int(n_dropped))
-        avgdl = w.set_stats(n_docs, int(m["total_tokens"]) - int(tokens_dropped))
+        w.set_stats(n_docs, int(m["total_tokens"]) - int(tokens_dropped))
 
         w.stage(
             "docs",
@@ -160,7 +160,7 @@ def delete_docs(
         filtered = (
             spark.read.parquet(src.postings)
             .join(seg_del.hint("merge") if bulk else F.broadcast(seg_del), "seg_id", "left")
-            .mapInPandas(_make_repack_fn(params, avgdl), POSTINGS_SCHEMA)
+            .mapInPandas(_make_repack_fn(window), POSTINGS_SCHEMA)
             .cache()
         )
 

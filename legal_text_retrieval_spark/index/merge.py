@@ -20,14 +20,13 @@ Why anything must be recomputed at all:
   string, df summed, idf recomputed from combined n_docs/df —
   including the okapi md5-bucketed ε-fold, which depends only on the
   merged (term, df) relation and so reproduces the rebuilt ε exactly).
-- **block/segment maxima** are upper bounds on tf_part, which depends
-  on the corpus-global avgdl — stale maxima from either source are NOT
-  safe bounds once avgdl moves, so every group's maxima are recomputed
-  (decode tfs/dls + vectorized arithmetic; no shuffle).
 - **shared (term, seg) groups** (both sides contribute docs to the
   same docID window) are decoded, merged by doc_id and re-encoded; the
   codec is deterministic, so single-side groups re-encode to the exact
   bytes they already had.
+
+Nothing in a packed row depends on avgdl or the BM25 params, so the
+union avgdl lands only in the manifest.
 
 The reference has no index persistence at all (it pickles a scorer
 object per corpus — /root/reference/src/data_generator.py:186-199);
@@ -74,8 +73,8 @@ def merge_indexes(
         root_b, mb.get("n_docs"), mb.get("total_tokens"), mb.get("input_fp"),
     )
     w = IndexWriter(spark, out_dir, params, resume, input_fp, merged_from=[root_a, root_b])
-    avgdl = w.set_stats(int(ma["n_docs"]) + int(mb["n_docs"]),
-                        int(ma["total_tokens"]) + int(mb["total_tokens"]))
+    w.set_stats(int(ma["n_docs"]) + int(mb["n_docs"]),
+                int(ma["total_tokens"]) + int(mb["total_tokens"]))
 
     ds_a = spark.read.parquet(pa.docstats)
     ds_b = spark.read.parquet(pb.docstats)
@@ -112,13 +111,12 @@ def merge_indexes(
     w.record_min_idf(dictionary)
 
     # -- postings: remap term_ids through the term string, then re-pack
-    # maxima (and any shared (term, seg) groups) against the new avgdl
+    # (shared (term, seg) groups decode-merge into one row)
     w.stage("postings", w.paths.postings, lambda: repack(
         remap_term_ids(spark.read.parquet(pa.postings), dict_a, dictionary).unionByName(
             remap_term_ids(spark.read.parquet(pb.postings), dict_b, dictionary)
         ),
-        params,
-        avgdl,
+        params.segment_doc_window,
     ))
     return w.finish()
 

@@ -1,4 +1,4 @@
-"""Top-k BM25 query engine over the packed index — block-max WAND.
+"""Top-k BM25 query engine over the packed index.
 
 Plan shape (all-queries-at-once, SURVEY.md §2.4 Q1/Q5):
 
@@ -15,7 +15,7 @@ Plan shape (all-queries-at-once, SURVEY.md §2.4 Q1/Q5):
             → explode each row to its term's buckets (map literal)
             → repartitionById(P, (seg_id·B + bucket) mod P)
             → sort by (seg_id, bucket, term_id)
-            → mapInPandas(streaming WAND kernel, one run per (seg_id,
+            → mapInPandas(streaming kernel, one run per (seg_id,
               bucket): each row decoded once, scored into every query of
               the bucket, segment top-ks merged per query → ranks)
             → B == P: collect — a query's segments all sit in its
@@ -23,24 +23,18 @@ Plan shape (all-queries-at-once, SURVEY.md §2.4 Q1/Q5):
               B < P:  window re-rank of the per-task top-k lists
             → δ-padding, planned only when some query can pad
 
-The kernel is Arrow-vectorized NumPy; per query it prunes at block
-granularity using (block_first, block_last, block_max_tfpart) metadata
-and is **bit-identical** to exhaustive scoring by construction:
+The kernel is Arrow-vectorized NumPy and scores every posting of a
+query's terms: each present row is scatter-added (``codec.scatter_add``)
+into a per-(query, segment) accumulator in term_id (= lexical term)
+order, so every doc folds its contributions in exactly the order the
+relational path does, and the top-k is **bit-identical** to it
+(SURVEY.md §5.3), then ranked by ``codec.topk_order``.
 
-- terms are processed in term_id (= lexical term) order, so surviving
-  docs accumulate contributions in exactly the order the relational
-  path folds them;
-- any decoded block's docs all become candidates, and blocks
-  intersecting candidates are always decoded, so a surviving doc's
-  score is complete;
-- a block is skipped only when block_ub + remaining-terms-ub < θ
-  (θ = current k-th partial score), which proves every doc first seen
-  in it can never reach the true top-k.
-
-Decoding is shared by the bucket's queries, so a skipped block saves
-only that query's scatter work.  Correctness-fallback
-``mode="exhaustive"`` scores every block; tests assert bitwise equality
-of the two modes (SURVEY.md §5.3).
+The module keeps the name of the block-max WAND kernel (Ding & Suel,
+SIGIR 2011) it used to run.  Scoring is exhaustive because block bounds
+skipped no block on the benchmark's 60-query batches: a block holding
+any doc already seen must be decoded, and decode is shared by a
+bucket's queries, so a skip could save one query's scatter work only.
 """
 
 from __future__ import annotations
@@ -144,11 +138,9 @@ def _make_stream_kernel(
     avgdl: float,
     window: int,
     k: int | None,
-    prune: bool,
     buckets: list,
-    block_size: int = 128,
 ):
-    """mapInPandas form of the WAND evaluation.  Rows arrive placed by
+    """mapInPandas form of the batch evaluation.  Rows arrive placed by
     (seg_id, bucket) and sorted by (seg_id, bucket, term_id), so each
     (segment, bucket) is a contiguous term_id-sorted run, walked by the
     engine's one run walker (``builder.runs``) like the pack and repack
@@ -162,72 +154,32 @@ def _make_stream_kernel(
     saw: final when a query's segments all sit in one task.  ``k=None``
     keeps every candidate (negative-weight mode)."""
     p = params
-    bs = block_size
 
     def top(ids, ms):
         return codec.topk_order(ids, ms, len(ids) if k is None else k)
 
-    def score_query(base, span, g, dec, present):
+    def score_query(base, span, dec, present):
         """One query over one segment: ``present`` holds its (row, w)
         pairs in ascending term order.  Returns (doc_ids, scores,
-        n_cand) of the segment-local top-k, or None when no candidate
-        survives.
+        n_cand) of the segment-local top-k, or None when no doc matched.
 
         Dense span-local accumulator (the serving scatter-add,
         ``codec.scatter_add``): arrays indexed by doc_id − base and sized
         by the run's doc span, so every per-term pass costs O(docs the
-        segment holds) rather than O(window).  Bit-identity is
-        preserved: each (doc, term) contributes exactly one float add,
-        applied in ascending term order (tests/test_wand_kernel_property.
-        py, test_index_engine.py).  A block is skipped only when its
-        bound plus the remaining terms' bound is below θ, the current
-        k-th partial score (module docstring)."""
+        segment holds) rather than O(window).  Each (doc, term)
+        contributes exactly one float add, applied in ascending term
+        order (tests/test_wand_kernel_property.py, test_index_engine.py)."""
         scores = np.zeros(span, dtype=np.float64)
         seen = np.zeros(span, dtype=bool)
-        n_seen = 0
-        rows = [r for r, _ in present]
-        weights = np.array([w for _, w in present], dtype=np.float64)
-        # bound of the terms after i: suffix sums clamped at ≥ 0 (a
-        # running subtraction can drift below the true tail)
-        rem_afters = np.maximum(
-            np.cumsum((weights * g["seg_max_tfpart"][rows])[::-1])[::-1], 0.0
-        )
-        rem_afters = np.append(rem_afters[1:], 0.0)
-
-        for r, w, rem_after in zip(rows, weights, rem_afters):
-            # θ less a 1e-12 relative slack: a block holding a doc that
-            # ties θ is never skipped over a rounding difference
-            theta = (
-                float(np.partition(scores[seen], n_seen - k)[n_seen - k]) * (1 - 1e-12)
-                if prune and n_seen >= k
-                else -np.inf
-            )
+        for r, w in present:
             slots, tfp = dec[r]
-            if theta > -np.inf:
-                bf = np.asarray(g["block_first"][r], dtype=np.int64)
-                blast = np.asarray(g["block_last"][r], dtype=np.int64)
-                bmax = np.asarray(g["block_max_tfpart"][r], dtype=np.float64)
-                # any seen doc inside [bf, bl]?  prefix-sum range test
-                cs = np.concatenate([[0], np.cumsum(seen)])
-                intersects = cs[blast - base + 1] - cs[bf - base] > 0
-                keep = intersects | (w * bmax + rem_after >= theta)
-                if not keep.any():
-                    continue
-                if not keep.all():
-                    # blocks are fixed-size except the last — expand the
-                    # per-block mask with the TRUE build block size (an
-                    # inferred size would misalign on a short tail block)
-                    sel = np.repeat(keep, bs)[: len(slots)]
-                    slots, tfp = slots[sel], tfp[sel]
             codec.scatter_add(scores, seen, slots, w, tfp)
-            n_seen = int(seen.sum())
-
-        if n_seen == 0:
+        cand = np.flatnonzero(seen)
+        if len(cand) == 0:
             return None
-        cand_ids = np.flatnonzero(seen) + base
-        cand_scores = scores[seen]
+        cand_ids, cand_scores = cand + base, scores[cand]
         sel = top(cand_ids, cand_scores)
-        return cand_ids[sel], cand_scores[sel], n_seen
+        return cand_ids[sel], cand_scores[sel], len(cand)
 
     def emit(acc):
         """Per query, the merged top-k of its segment lists, ranked."""
@@ -252,17 +204,18 @@ def _make_stream_kernel(
         acc: dict = {}  # qid → (query_id, qconst, [segment top-k results])
         for (seg_id, bucket), g in runs(batches, ("seg_id", "bucket"), _RUN_COLS):
             base = int(seg_id) * window
-            span = max(int(bl[-1]) for bl in g["block_last"]) - base + 1
             dec = []
             for i in range(len(g["term_id"])):
                 ids, tfs, dls = codec.unpack_row(
                     g["doc_ids_enc"][i], g["tfs_enc"][i], g["dls_enc"][i], base
                 )
                 dec.append((ids - base, codec.tf_part(tfs, dls, p.k1, p.b, avgdl, p.variant)))
+            # rows are docID-sorted: the run's span ends at its largest last id
+            span = max(int(slots[-1]) for slots, _ in dec) + 1
             row_of = {int(t): i for i, t in enumerate(g["term_id"])}
             for qid, query_id, qconst, terms in buckets[int(bucket)]:
                 present = [(row_of[t], w) for t, w in terms if t in row_of]
-                res = score_query(base, span, g, dec, present)
+                res = score_query(base, span, dec, present)
                 if res is None:
                     continue
                 acc.setdefault(qid, (query_id, qconst, []))[2].append(res)
@@ -271,8 +224,7 @@ def _make_stream_kernel(
     return kernel
 
 
-_RUN_COLS = ("term_id", "seg_max_tfpart", "block_first", "block_last",
-             "block_max_tfpart", "doc_ids_enc", "tfs_enc", "dls_enc")
+_RUN_COLS = ("term_id", "doc_ids_enc", "tfs_enc", "dls_enc")
 
 
 def _prepare_batch(index: FulltextIndex, queries: DataFrame, k: int, query_col: str):
@@ -309,7 +261,7 @@ def _prepare_batch(index: FulltextIndex, queries: DataFrame, k: int, query_col: 
             continue  # null text: no δ-constant, so no rows (query_topk)
         # scoring terms leave out idf == 0 (okapi df == n/2) like the
         # relational plan (bm25.py: idf != 0): they would mark docs
-        # matched, and w == 0 invalidates the block-skip bound
+        # matched
         idf = {t: r.idf for t, (_, r) in terms.items() if r.idf is not None}
         qconst, order = codec.fold_query(params, {t: n for t, (n, _) in terms.items()}, idf)
         qconst_rows.append((qid, query_id, qconst))
@@ -346,7 +298,11 @@ def query_topk(
     with fewer than k matching docs).  A null ``query_text`` has no
     tokens: under ``plus`` it gets no δ-constant and returns no rows,
     under ``okapi`` it returns k pad rows at score 0.  An empty or
-    punctuation-only text tokenizes to [''], a one-term query."""
+    punctuation-only text tokenizes to [''], a one-term query.  k=0
+    returns no rows.
+
+    ``mode`` is accepted for callers that still pass ``"wand"`` or
+    ``"exhaustive"``; both run the one exhaustive plan."""
     from ..functions.numeric import round_sql
 
     spark = index.spark
@@ -365,14 +321,12 @@ def query_topk(
                 term_buckets.setdefault(t, set()).add(b)
 
     # okapi negative-ε corner (mean idf0 < 0: tiny-vocab/repetitive
-    # corpora): WAND's block-max bounds assume non-negative weights
-    # (w·block_max is only an upper bound for w ≥ 0) and matched docs
-    # can score BELOW the unmatched 0, so pads may outrank matched.
-    # Handled exactly: pruning off (exhaustive decode — still the
-    # compressed-index path), pads generated for EVERY query and
-    # re-ranked together with matched rows.  Indexes built before
-    # min_idf was recorded must not silently default to "safe": compute
-    # it from the (cached, small) dictionary instead.
+    # corpora): matched docs can score BELOW the unmatched 0, so pads
+    # may outrank matched.  Handled exactly: the kernel keeps every
+    # candidate, pads are generated for EVERY query and re-ranked
+    # together with matched rows.  Indexes built before min_idf was
+    # recorded must not silently default to "safe": compute it from the
+    # (cached, small) dictionary instead.
     negative_weights = False
     if params.variant == "okapi":
         min_idf = index.manifest.get("min_idf")
@@ -411,13 +365,7 @@ def query_topk(
     # resurrected as a score-qconst pad — wrong when its true score is
     # below qconst.
     kernel = _make_stream_kernel(
-        params,
-        avgdl,
-        window,
-        None if negative_weights else k,
-        prune=(mode == "wand" and not negative_weights),
-        buckets=buckets,
-        block_size=index.index_params.block_size,
+        params, avgdl, window, None if negative_weights else k, buckets
     )
     kernel_schema = T.StructType(
         [

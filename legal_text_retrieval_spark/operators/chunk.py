@@ -201,11 +201,11 @@ def bm25_chunked_topk_indexed(
     stride: int = 50,
     text_col: str = "content",
 ) -> DataFrame:
-    """:func:`bm25_chunked_topk` served from the packed index: block-max
-    WAND over the docs ∪ chunks corpus (bit-identical scores to the
-    relational scorer — tests/test_chunked_index.py), then the same
-    chunk→parent keep-first dedup.  Same DuckDB oracle as the
-    relational form."""
+    """:func:`bm25_chunked_topk` served from the packed index:
+    ``wand.query_topk`` over the docs ∪ chunks corpus (bit-identical
+    scores to the relational scorer — tests/test_chunked_index.py),
+    then the same chunk→parent keep-first dedup.  Same DuckDB oracle as
+    the relational form."""
     from ..index.wand import query_topk
 
     index = build_chunked_index(

@@ -13,9 +13,11 @@ keeps an index fresh as new corpus files land, Lucene-style:
   snapshotted in the manifest and refreshed by a compaction — between
   compactions, queries score with the last snapshot's statistics
   (standard trade-off for incremental inverted indexes; exactness is
-  restored by a compaction, which tests verify).
+  restored by a compaction, which tests verify).  Packed rows hold no
+  avgdl-dependent field, so an appended generation's rows are never
+  stale.
 
-The layout params (segment_doc_window, block_size, BM25) always come
+The layout params (segment_doc_window, BM25) always come
 from the index's own manifest (builder.read_manifest), never from the
 caller, so an append or a compaction cannot pack with a window the
 existing segments were not built with.  ``compact_merged`` re-packs
@@ -47,8 +49,7 @@ from ..operators import stats as ops_stats
 
 def _append_batch(batch: DataFrame, paths: IndexPaths, text_col: str) -> None:
     spark = batch.sparkSession
-    manifest, params = read_manifest(paths.root)
-    avgdl = manifest["avgdl"]  # snapshot stats (refreshed at compaction)
+    _, params = read_manifest(paths.root)
 
     batch = batch.select("doc_id", text_col).withColumn(
         "content_sha", F.sha2(F.col(text_col), 256)
@@ -87,7 +88,7 @@ def _append_batch(batch: DataFrame, paths: IndexPaths, text_col: str) -> None:
             max(1, spark.sparkContext.defaultParallelism), "term_id", "seg_id"
         )
         .sortWithinPartitions("term_id", "seg_id", "doc_id")
-        .mapInPandas(_make_pack_fn(params, avgdl), POSTINGS_SCHEMA)
+        .mapInPandas(_make_pack_fn(params.segment_doc_window), POSTINGS_SCHEMA)
     )
     packed.write.mode("append").parquet(paths.postings)
 
@@ -163,9 +164,9 @@ def compact_merged(spark: SparkSession, index_root: str):
       were appended above max_id; a rebuild would rank them lexically)
       with idf + okapi ε-fold recomputed, fixing the idf=0
       placeholders;
-    - one decode-merge-re-encode pass over the packed rows, maxima
-      recomputed against the exact avgdl (delta generations were
-      packed against snapshot stats — their stored maxima are ignored).
+    - one decode-merge-re-encode pass over the packed rows (no
+      avgdl-dependent field to refresh: the exact avgdl goes only into
+      the manifest).
 
     Never touches the raw (term, doc) posting stream: compaction cost
     is O(packed bytes), not O(corpus tokenize+shuffle).  Bit-identical
@@ -177,7 +178,7 @@ def compact_merged(spark: SparkSession, index_root: str):
     tmp_root = index_root.rstrip("/") + ".compact"
     shutil.rmtree(tmp_root, ignore_errors=True)
     w = IndexWriter(spark, tmp_root, params, resume=False, compacted_from=index_root)
-    avgdl = w.set_stats(*spark.read.parquet(paths.docstats).agg(F.count("*"), F.sum("dl")).collect()[0])
+    w.set_stats(*spark.read.parquet(paths.docstats).agg(F.count("*"), F.sum("dl")).collect()[0])
     # docs/docstats are already the union on disk — copy verbatim
     shutil.copytree(paths.docs, w.paths.docs)
     shutil.copytree(paths.docstats, w.paths.docstats)
@@ -187,7 +188,7 @@ def compact_merged(spark: SparkSession, index_root: str):
     dictionary = w.dictionary(lambda: dfreq_from_postings(postings_all, old_dict))
     w.record_min_idf(dictionary)
     w.stage("postings", w.paths.postings, lambda: repack(
-        remap_term_ids(postings_all, old_dict, dictionary), params, avgdl
+        remap_term_ids(postings_all, old_dict, dictionary), params.segment_doc_window
     ))
     w.finish()
     return _swap_into_place(spark, index_root, tmp_root)

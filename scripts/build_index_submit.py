@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--b", type=float, default=0.75)
     ap.add_argument("--delta", type=float, default=1.0)
     ap.add_argument("--variant", default="plus", choices=["plus", "okapi"])
-    ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--segment-doc-window", type=int, default=1 << 20)
     ap.add_argument("--text-col", default="content")
     ap.add_argument("--no-resume", action="store_true")
@@ -44,7 +43,6 @@ def main() -> None:
     if "doc_id" not in docs.columns:
         docs = load_corpus(spark, args.input)
     params = IndexParams(
-        block_size=args.block_size,
         segment_doc_window=args.segment_doc_window,
         bm25=BM25Params(k1=args.k1, b=args.b, delta=args.delta, variant=args.variant),
     )

@@ -54,7 +54,8 @@ def main() -> int:
     import __spark_entry__ as E
     from legal_text_retrieval_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=16)
+    # cores: the CPU affinity default of get_spark
+    spark = get_spark(shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -22,7 +22,6 @@ def main() -> None:
     ap.add_argument("--queries", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--k", type=int, default=150)
-    ap.add_argument("--mode", default="wand", choices=["wand", "exhaustive"])
     ap.add_argument("--format", default="parquet", choices=["parquet", "trec"])
     args = ap.parse_args()
 
@@ -32,7 +31,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("lts-query").getOrCreate()
     index = FulltextIndex.load(spark, args.index)
     queries = spark.read.parquet(args.queries)
-    out = query_topk(index, queries, k=args.k, mode=args.mode)
+    out = query_topk(index, queries, k=args.k)
     if args.format == "trec":
         write_trec_run(out, args.output)
     else:

@@ -107,7 +107,7 @@ def test_chunked_index_merge_delete_parity(
     import pandas as pd
 
     tmp = tmp_path_factory.mktemp("chunked_lifecycle")
-    iparams = IndexParams(block_size=16, segment_doc_window=64, bm25=PARAMS)
+    iparams = IndexParams(segment_doc_window=64, bm25=PARAMS)
     corpus = chunked_corpus(tiny_docs, **CHUNK).cache()
     parent = F.expr(
         f"CASE WHEN doc_id >= {CHUNK_ID_BASE} "

@@ -1,5 +1,5 @@
-"""Codec round-trip identity + block-max invariants (SURVEY.md §5.2),
-hypothesis-randomized with fixed seeds."""
+"""Codec round-trip identity (SURVEY.md §5.2), hypothesis-randomized
+with fixed seeds."""
 
 from __future__ import annotations
 

@@ -40,7 +40,7 @@ def test_iceberg_shape_end_to_end(spark, tmp_path):
     spark.createDataFrame(make_corpus(120)).write.mode("overwrite").parquet(src)
     docs = load_corpus(spark, src)
 
-    params = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
+    params = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
     paths = builder.build_index(spark, docs, str(tmp_path / "idx"), params)
     stored = spark.read.parquet(paths.docs)
     assert {"repo", "path", "commit", "doc_id", "content_sha"} <= set(stored.columns)

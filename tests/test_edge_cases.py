@@ -4,8 +4,6 @@ single-doc corpus, single-token docs, empty-string docs, lang-filtered
 
 from __future__ import annotations
 
-import tempfile
-
 import pandas as pd
 import pytest
 
@@ -13,12 +11,11 @@ from legal_text_retrieval_spark.config import BM25Params, IndexParams
 from legal_text_retrieval_spark.index import builder, wand
 from legal_text_retrieval_spark.operators import bm25 as B
 
-PARAMS = IndexParams(block_size=4, segment_doc_window=8, bm25=BM25Params(k1=1.2))
+PARAMS = IndexParams(segment_doc_window=8, bm25=BM25Params(k1=1.2))
 
 
-def _check(spark, docs_pdf, query_text, k):
+def _check(spark, root, docs_pdf, query_text, k):
     docs = spark.createDataFrame(docs_pdf)
-    root = tempfile.mkdtemp(prefix="edge_")
     builder.build_index(spark, docs, root, PARAMS)
     idx = wand.FulltextIndex.load(spark, root)
     q = spark.createDataFrame(pd.DataFrame({"query_id": ["q"], "query_text": [query_text]}))
@@ -31,22 +28,22 @@ def _check(spark, docs_pdf, query_text, k):
     return got
 
 
-def test_single_doc_corpus(spark):
+def test_single_doc_corpus(spark, tmp_path):
     pdf = pd.DataFrame({"doc_id": [0], "content": ["def foo return"]})
-    got = _check(spark, pdf, "def", k=3)
+    got = _check(spark, str(tmp_path), pdf, "def", k=3)
     assert len(got) == 1  # only one doc exists — k capped by corpus
 
 
-def test_empty_string_docs(spark):
+def test_empty_string_docs(spark, tmp_path):
     pdf = pd.DataFrame(
         {"doc_id": [0, 1, 2], "content": ["", "def foo", "  "]}
     )
-    _check(spark, pdf, "def", k=3)
+    _check(spark, str(tmp_path), pdf, "def", k=3)
 
 
-def test_all_docs_identical(spark):
+def test_all_docs_identical(spark, tmp_path):
     pdf = pd.DataFrame({"doc_id": list(range(10)), "content": ["x y z"] * 10})
-    got = _check(spark, pdf, "x", k=5)
+    got = _check(spark, str(tmp_path), pdf, "x", k=5)
     # perfect ties → reference argsort order: highest doc_ids first
     assert got["doc_id"].tolist() == [9, 8, 7, 6, 5]
 

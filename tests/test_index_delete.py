@@ -1,8 +1,8 @@
 """Index DELETE gate: removing a doc batch from a packed index must
 reproduce a fresh build over the surviving corpus bit-for-bit —
 dictionary (incl. vanished terms and reassigned lexical term_ids),
-packed posting bytes, maxima vs the post-delete avgdl, manifest stats,
-and WAND query scores."""
+packed posting bytes, manifest stats (incl. the post-delete avgdl) and
+WAND query scores."""
 
 from __future__ import annotations
 
@@ -20,9 +20,8 @@ from legal_text_retrieval_spark.index.delete import delete_docs
 
 from test_index_merge import _dict_pdf, _postings_pdf
 
-PARAMS = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
-OKAPI = IndexParams(block_size=16, segment_doc_window=64,
-                    bm25=BM25Params(k1=1.2, variant="okapi"))
+PARAMS = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
+OKAPI = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2, variant="okapi"))
 
 
 def _delete_and_compare(spark, tiny_docs, tmp, params, deleted):

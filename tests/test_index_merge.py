@@ -1,7 +1,7 @@
 """Index MERGE gate (north_rule: construction, MERGE, compression,
 top-k): merging indexes built over disjoint doc splits must reproduce
 the union-corpus build bit-for-bit — dictionary, packed posting bytes,
-block maxima, manifest stats, and WAND query scores."""
+manifest stats, and WAND query scores."""
 
 from __future__ import annotations
 
@@ -19,15 +19,10 @@ from legal_text_retrieval_spark.index.merge import merge_indexes
 # small segment window so the 200-doc fixture spans multiple segments;
 # parity split ⇒ every (term, seg) group has docs from BOTH sides
 # (decode-merge-reencode path), range split ⇒ disjoint segments
-PARAMS = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
-OKAPI = IndexParams(block_size=16, segment_doc_window=64,
-                    bm25=BM25Params(k1=1.2, variant="okapi"))
+PARAMS = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
+OKAPI = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2, variant="okapi"))
 
-_POSTING_COLS = [
-    "term_id", "seg_id", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc",
-    "block_first", "block_last", "block_max_tfpart", "seg_max_tfpart",
-    "enc_bytes",
-]
+_POSTING_COLS = ["term_id", "seg_id", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc", "enc_bytes"]
 
 
 def _build(spark, docs, out, params):
@@ -35,17 +30,13 @@ def _build(spark, docs, out, params):
 
 
 def _postings_pdf(spark, paths) -> pd.DataFrame:
-    pdf = (
+    return (
         spark.read.parquet(paths.postings)
         .select(*_POSTING_COLS)
         .toPandas()
         .sort_values(["term_id", "seg_id"])
         .reset_index(drop=True)
     )
-    pdf["block_first"] = pdf["block_first"].apply(list)
-    pdf["block_last"] = pdf["block_last"].apply(list)
-    pdf["block_max_tfpart"] = pdf["block_max_tfpart"].apply(list)
-    return pdf
 
 
 def _dict_pdf(spark, paths) -> pd.DataFrame:
@@ -69,7 +60,7 @@ def _merge_and_compare(spark, tiny_docs, tmp, params, split_col):
     da, dd = _dict_pdf(spark, merged), _dict_pdf(spark, direct)
     pd.testing.assert_frame_equal(da[sorted(da.columns)], dd[sorted(dd.columns)])
 
-    # postings: byte-identical encodings and maxima
+    # postings: byte-identical encodings
     pm, pdir = _postings_pdf(spark, merged), _postings_pdf(spark, direct)
     pd.testing.assert_frame_equal(pm, pdir)
 
@@ -150,8 +141,7 @@ def test_merge_rejects_param_mismatch(spark, tiny_docs, tmp_path):
     docs_b = tiny_docs.filter(F.col("doc_id") >= 100)
     pa = _build(spark, docs_a, tmp_path / "a", PARAMS)
     pb = _build(spark, docs_b, tmp_path / "b",
-                IndexParams(block_size=16, segment_doc_window=64,
-                            bm25=BM25Params(k1=1.5)))
+                IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.5)))
     with pytest.raises(ValueError, match="incompatible"):
         merge_indexes(spark, pa.root, pb.root, str(tmp_path / "m"))
 

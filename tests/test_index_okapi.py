@@ -9,7 +9,7 @@ from legal_text_retrieval_spark.config import BM25Params, IndexParams
 from legal_text_retrieval_spark.index import builder, wand
 from legal_text_retrieval_spark.operators import bm25 as B
 
-PARAMS = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(variant="okapi"))
+PARAMS = IndexParams(segment_doc_window=64, bm25=BM25Params(variant="okapi"))
 
 
 def test_okapi_index_matches_relational(spark, tiny_docs, tiny_queries, tmp_path):

@@ -25,7 +25,7 @@ def test_postings_scan_prunes_term_ids(spark, tiny_docs, tiny_queries, tmp_path)
     from legal_text_retrieval_spark.config import BM25Params, IndexParams
     from legal_text_retrieval_spark.index import builder, wand
 
-    params = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
+    params = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
     paths = builder.build_index(spark, tiny_docs, str(tmp_path / "idx"), params)
     index = wand.FulltextIndex.load(spark, paths.root)
     out = wand.query_topk(index, tiny_queries.limit(3), k=5)

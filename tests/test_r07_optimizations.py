@@ -74,7 +74,7 @@ def test_wand_short_circuit_deficit_parity(spark, tiny_docs, tiny_queries, tmp_p
     from legal_text_retrieval_spark.config import IndexParams
     from legal_text_retrieval_spark.index import builder, wand
 
-    params = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
+    params = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
     out = str(tmp_path / "idx")
     builder.build_index(spark, tiny_docs, out, params)
     index = wand.FulltextIndex.load(spark, out)

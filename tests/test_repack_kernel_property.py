@@ -20,17 +20,11 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from legal_text_retrieval_spark.config import BM25Params, IndexParams
 from legal_text_retrieval_spark.index import codec
 from legal_text_retrieval_spark.index.builder import _make_repack_fn, _pack_group
 
-PARAMS = IndexParams(block_size=4, segment_doc_window=64, bm25=BM25Params(k1=1.2))
-WINDOW = PARAMS.segment_doc_window
-AVGDL = 21.5
-_OUT_COLS = [
-    "term_id", "seg_id", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc",
-    "block_first", "block_last", "block_max_tfpart", "seg_max_tfpart", "enc_bytes",
-]
+WINDOW = 64
+_OUT_COLS = ["term_id", "seg_id", "n_docs", "doc_ids_enc", "tfs_enc", "dls_enc", "enc_bytes"]
 
 
 def _rows(rng, n_groups, multi, gone):
@@ -89,7 +83,7 @@ def _expected(raw, deleted_of):
                 term_id, seg_id, np.array(order, dtype=np.int64),
                 np.array([docs[x][0] for x in order], dtype=np.int64),
                 np.array([docs[x][1] for x in order], dtype=np.int64),
-                PARAMS, AVGDL,
+                WINDOW,
             ))
     return out
 
@@ -98,7 +92,7 @@ def _run(pdf, cuts):
     """The kernel over ``pdf`` cut into batches at the row offsets ``cuts``."""
     edges = [0, *sorted(set(cuts)), len(pdf)]
     batches = [pdf.iloc[a:b].reset_index(drop=True) for a, b in zip(edges, edges[1:]) if b > a]
-    out = list(_make_repack_fn(PARAMS, AVGDL)(iter(batches)))
+    out = list(_make_repack_fn(WINDOW)(iter(batches)))
     return pd.concat(out, ignore_index=True).to_dict("records") if out else []
 
 
@@ -106,10 +100,7 @@ def _assert_rows_equal(got, want):
     assert len(got) == len(want)
     for g, w in zip(got, want):
         for c in _OUT_COLS:
-            gv, wv = g[c], w[c]
-            if c in ("block_first", "block_last", "block_max_tfpart"):
-                gv, wv = list(gv), list(wv)
-            assert gv == wv, c
+            assert g[c] == w[c], c
         assert g["build_part"] == -1
 
 

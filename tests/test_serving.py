@@ -11,7 +11,7 @@ import pytest
 from legal_text_retrieval_spark.config import BM25Params, IndexParams
 from legal_text_retrieval_spark.index import builder, serving, wand
 
-PARAMS = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
+PARAMS = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
 
 
 @pytest.fixture(scope="module")
@@ -34,6 +34,12 @@ def test_serving_matches_wand_bitwise(spark, served, tiny_queries, tiny_queries_
         assert [d for d, _ in got] == w["doc_id"].tolist(), row.query_id
         gs = np.array([s for _, s in got])
         assert (gs.view("int64") == w["score"].values.view("int64")).all(), row.query_id
+
+
+def test_k_zero_returns_no_rows(served, tiny_queries, tiny_queries_pdf):
+    index, srv = served
+    assert wand.query_topk(index, tiny_queries, k=0).count() == 0
+    assert all(srv.query(t, 0) == [] for t in tiny_queries_pdf["query_text"])
 
 
 def test_serving_oov_padding(served):

@@ -11,7 +11,7 @@ from legal_text_retrieval_spark.index import builder, wand
 from legal_text_retrieval_spark.operators import bm25 as B
 from legal_text_retrieval_spark.streaming import incremental
 
-PARAMS = IndexParams(block_size=16, segment_doc_window=64, bm25=BM25Params(k1=1.2))
+PARAMS = IndexParams(segment_doc_window=64, bm25=BM25Params(k1=1.2))
 
 
 def test_stream_append_then_compact(spark, tiny_corpus_pdf, tmp_path):

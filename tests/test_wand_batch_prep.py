@@ -45,9 +45,7 @@ DEGENERATE_QUERIES = pd.DataFrame(
 @pytest.fixture(scope="module", params=["plus", "okapi"])
 def setup(request, spark, tmp_path_factory):
     docs = spark.createDataFrame(DOCS)
-    params = IndexParams(
-        block_size=2, segment_doc_window=4, bm25=BM25Params(variant=request.param)
-    )
+    params = IndexParams(segment_doc_window=4, bm25=BM25Params(variant=request.param))
     out = str(tmp_path_factory.mktemp(f"idx_{request.param}"))
     index = wand.FulltextIndex.load(spark, builder.build_index(spark, docs, out, params).root)
     idf = {r.term: r.idf for r in index.dictionary().collect()}

@@ -15,9 +15,7 @@ from legal_text_retrieval_spark.config import BM25Params, IndexParams
 def _build(spark, docs, path, variant="plus"):
     from legal_text_retrieval_spark.index import builder, wand
 
-    params = IndexParams(
-        block_size=16, segment_doc_window=64, bm25=BM25Params(variant=variant)
-    )
+    params = IndexParams(segment_doc_window=64, bm25=BM25Params(variant=variant))
     paths = builder.build_index(spark, docs, str(path), params)
     return wand.FulltextIndex.load(spark, paths.root)
 
@@ -64,10 +62,10 @@ def test_wide_query_batch_over_guard(spark, tiny_docs, tmp_path):
 
 def test_okapi_negative_eps_index_exact(spark, tmp_path):
     """Repetitive tiny-vocab corpus → mean idf0 < 0 → negative ε floor:
-    WAND bounds are invalid and unmatched docs (score 0) can outrank
-    matched ones, so the index path must switch to exhaustive decode +
-    all-query pad re-rank — and still match the relational dense plan
-    rank-for-rank.  Serving must agree too."""
+    unmatched docs (score 0) can outrank matched ones, so the index path
+    must keep every candidate and re-rank pads for every query — and
+    still match the relational dense plan rank-for-rank.  Serving must
+    agree too."""
     from legal_text_retrieval_spark.config import BM25Params
     from legal_text_retrieval_spark.index import wand
     from legal_text_retrieval_spark.index.serving import LocalIndexServer

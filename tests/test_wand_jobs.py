@@ -12,6 +12,7 @@ import pytest
 
 from legal_text_retrieval_spark.config import IndexParams
 from legal_text_retrieval_spark.index import builder, wand
+from legal_text_retrieval_spark.operators import bm25 as B
 
 # jobs of one measured warm batch, each counted in fresh sessions
 # (local[4], 8 shuffle partitions).  No query can pad: 4, measured
@@ -36,10 +37,11 @@ def _sorted(pdf):
     return pdf.sort_values(["query_id", "rank"]).reset_index(drop=True)
 
 
-def _warm_batch_jobs(spark, index, queries_pdf, k, group):
+def _warm_batch_jobs(spark, index, docs, queries_pdf, k, group):
     """Runs one warm-up batch over the first half of ``queries_pdf``,
     then the second half under job group ``group``.  Returns the second
-    batch's rows, its Spark job count and the exhaustive-mode rows."""
+    batch's rows, its Spark job count and the exhaustive relational
+    plan's rows over ``docs``."""
     sc = spark.sparkContext
     half = len(queries_pdf) // 2
     warm = spark.createDataFrame(queries_pdf.iloc[:half])
@@ -52,7 +54,7 @@ def _warm_batch_jobs(spark, index, queries_pdf, k, group):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    want = _sorted(wand.query_topk(index, batch, k=k, mode="exhaustive").toPandas())
+    want = _sorted(B.bm25_topk(docs, batch, index.params, k=k, score_round=None).toPandas())
     return got, n_jobs, want
 
 
@@ -62,18 +64,18 @@ def _assert_same(got, want, n_rows):
     assert (got["score"].values.view("int64") == want["score"].values.view("int64")).all()
 
 
-def test_warm_batch_job_count_and_exhaustive_identity(spark, index, tiny_queries_pdf):
+def test_warm_batch_job_count_and_exhaustive_identity(spark, index, tiny_docs, tiny_queries_pdf):
     got, n_jobs, want = _warm_batch_jobs(
-        spark, index, tiny_queries_pdf, K, "test_wand_jobs.warm_batch"
+        spark, index, tiny_docs, tiny_queries_pdf, K, "test_wand_jobs.warm_batch"
     )
     assert 0 < n_jobs <= MAX_WARM_BATCH_JOBS, n_jobs
     _assert_same(got, want, (len(tiny_queries_pdf) - len(tiny_queries_pdf) // 2) * K)
 
 
-def test_warm_pad_batch_job_count_and_exhaustive_identity(spark, index, tiny_queries_pdf):
+def test_warm_pad_batch_job_count_and_exhaustive_identity(spark, index, tiny_docs, tiny_queries_pdf):
     n_docs = index.manifest["n_docs"]
     got, n_jobs, want = _warm_batch_jobs(
-        spark, index, tiny_queries_pdf, n_docs + 300, "test_wand_jobs.warm_pad_batch"
+        spark, index, tiny_docs, tiny_queries_pdf, n_docs + 300, "test_wand_jobs.warm_pad_batch"
     )
     assert 0 < n_jobs <= MAX_WARM_PAD_BATCH_JOBS, n_jobs
     _assert_same(got, want, (len(tiny_queries_pdf) - len(tiny_queries_pdf) // 2) * n_docs)

@@ -1,15 +1,15 @@
-"""Hypothesis property test for the block-max WAND kernel in isolation:
-for randomized posting segments and query weights, pruned evaluation
-must equal exhaustive evaluation bit-for-bit (the SURVEY §5.3 safety
+"""Hypothesis property tests for the ``query_topk`` kernel in isolation:
+for randomized posting segments and query weights, its top-k must equal
+an independent per-doc reference bit for bit (the SURVEY §5.3 safety
 property, without Spark in the loop).  The rows reach the production
 streaming kernel split into two Arrow-style batches at a drawn point,
-so the carry that stitches a run across batches is exercised too: the
-pruned run is split, the exhaustive reference is one batch.  A second
-property runs the kernel with a 2^20-doc window over a few hundred docs
-(the accumulator is sized by the docs' span, not the window) against an
-independent per-doc reference.  Another puts several queries that
-share terms into one bucket: each must score bit-equal to running
-alone, and each posting row is decoded exactly once."""
+so the carry that stitches a run across batches is exercised too.  A
+second property runs the kernel with a 2^20-doc window over a few
+hundred docs (the accumulator is sized by the docs' span, not the
+window); a third gives every posting one equal contribution, so docs
+tie exactly.  Another puts several queries that share terms into one
+bucket: each must score bit-equal to running alone, and each posting
+row is decoded exactly once."""
 
 from __future__ import annotations
 
@@ -27,7 +27,6 @@ from legal_text_retrieval_spark.index.wand import _make_stream_kernel
 PARAMS = BM25Params(k1=1.2)
 WINDOW = 256
 BIG_WINDOW = 1 << 20  # the IndexParams default
-BLOCK = 8
 AVGDL = 37.5
 
 
@@ -43,15 +42,8 @@ def _segment_row(rng, term_id, seg_id, n_docs, window=WINDOW, span=WINDOW):
 
 
 def _row(term_id, seg_id, ids, tfs, dls, qtf, idf, window):
-    """The posting row of docs ``ids`` (ascending, inside the segment)
-    with block metadata at block size BLOCK."""
-    n_docs = len(ids)
+    """The posting row of docs ``ids`` (ascending, inside the segment)."""
     base = seg_id * window
-    tfp = codec.tf_part(tfs, dls, PARAMS.k1, PARAMS.b, AVGDL, PARAMS.variant)
-    nb = (n_docs + BLOCK - 1) // BLOCK
-    bf = [int(ids[i * BLOCK]) for i in range(nb)]
-    bl = [int(ids[min((i + 1) * BLOCK, n_docs) - 1]) for i in range(nb)]
-    bm = [float(tfp[i * BLOCK : (i + 1) * BLOCK].max()) for i in range(nb)]
     return {
         "seg_id": seg_id,
         "term_id": term_id,
@@ -60,14 +52,10 @@ def _row(term_id, seg_id, ids, tfs, dls, qtf, idf, window):
         "doc_ids_enc": codec.encode_docids(ids, base),
         "tfs_enc": codec.encode_varint(tfs),
         "dls_enc": codec.encode_varint(dls),
-        "block_first": bf,
-        "block_last": bl,
-        "block_max_tfpart": bm,
-        "seg_max_tfpart": float(tfp.max()),
     }
 
 
-def _run(pdf, split, k, prune, window=WINDOW, plan=None):
+def _run(pdf, split, k, window=WINDOW, plan=None):
     """The stream kernel over ``pdf``'s posting rows, all placed in
     bucket 0 and cut into batches at row ``split`` (a cut at either end
     leaves one batch).  The rows lose their qtf/idf columns: by default
@@ -76,37 +64,9 @@ def _run(pdf, split, k, prune, window=WINDOW, plan=None):
     if plan is None:
         plan = [[("q", "q", 0.0, [(int(r.term_id), r.qtf * r.idf) for r in pdf.itertuples()])]]
     rows = pdf.drop(columns=["qtf", "idf"]).assign(bucket=0)
-    kernel = _make_stream_kernel(PARAMS, AVGDL, window, k, prune, plan, block_size=BLOCK)
+    kernel = _make_stream_kernel(PARAMS, AVGDL, window, k, plan)
     batches = [b.copy() for b in (rows.iloc[:split], rows.iloc[split:]) if len(b)]
     return pd.concat(kernel(iter(batches)), ignore_index=True)
-
-
-@given(
-    seed=st.integers(0, 10_000),
-    n_terms=st.integers(1, 8),
-    k=st.sampled_from([1, 3, 10, 50]),
-    split=st.integers(0, 8),
-)
-@settings(max_examples=150, deadline=None)
-def test_pruned_equals_exhaustive(seed, n_terms, k, split):
-    rng = np.random.default_rng(seed)
-    rows = [
-        _segment_row(rng, term_id=t, seg_id=5, n_docs=int(rng.integers(1, WINDOW)))
-        for t in range(n_terms)
-    ]
-    pdf = pd.DataFrame(rows)
-    out_prune = _run(pdf, split, k, prune=True)
-    out_exh = _run(pdf, 0, k, prune=False)
-    assert out_prune["doc_id"].tolist() == out_exh["doc_id"].tolist()
-    assert (
-        out_prune["ms"].to_numpy().view("int64") == out_exh["ms"].to_numpy().view("int64")
-    ).all()
-    # n_cand drives the δ-padding decision: pruning may undercount
-    # candidates ONLY when ≥ k already exist (θ activates at k), so the
-    # "pad needed?" predicate (n_cand < k) is always preserved.
-    if len(out_exh):
-        ne, np_ = out_exh["n_cand"].iloc[0], out_prune["n_cand"].iloc[0]
-        assert (ne == np_) or (ne >= k and np_ >= k)
 
 
 def _reference_topk(rows, k, window=BIG_WINDOW):
@@ -126,6 +86,34 @@ def _reference_topk(rows, k, window=BIG_WINDOW):
     return top, [acc[d] for d in top], len(acc)
 
 
+def _assert_matches_reference(rows, out, k, window):
+    """The kernel's ranks, score bits and candidate count equal the
+    per-doc reference's."""
+    want_ids, want_ms, want_cand = _reference_topk(rows, k, window)
+    assert out["doc_id"].tolist() == want_ids
+    assert out["ms"].to_numpy().view("int64").tolist() == (
+        np.array(want_ms, dtype=np.float64).view("int64").tolist()
+    )
+    assert out["rank"].tolist() == list(range(1, len(want_ids) + 1))
+    assert int(out["n_cand"].iloc[0]) == want_cand
+
+
+@given(
+    seed=st.integers(0, 10_000),
+    n_terms=st.integers(1, 8),
+    k=st.sampled_from([1, 3, 10, 50]),
+    split=st.integers(0, 8),
+)
+@settings(max_examples=150, deadline=None)
+def test_split_batches_match_reference(seed, n_terms, k, split):
+    rng = np.random.default_rng(seed)
+    rows = [
+        _segment_row(rng, term_id=t, seg_id=5, n_docs=int(rng.integers(1, WINDOW)))
+        for t in range(n_terms)
+    ]
+    _assert_matches_reference(rows, _run(pd.DataFrame(rows), split, k), k, WINDOW)
+
+
 @given(
     seed=st.integers(0, 10_000),
     n_terms=st.integers(1, 8),
@@ -143,18 +131,8 @@ def test_window_larger_than_span_matches_reference(seed, n_terms, span, seg_id, 
         )
         for t in range(n_terms)
     ]
-    want_ids, want_ms, want_cand = _reference_topk(rows, k)
-    want_bits = np.array(want_ms, dtype=np.float64).view("int64").tolist()
-    pdf = pd.DataFrame(rows)
-    for prune in (True, False):
-        out = _run(pdf, split if prune else 0, k, prune, window=BIG_WINDOW)
-        assert out["doc_id"].tolist() == want_ids
-        assert out["ms"].to_numpy().view("int64").tolist() == want_bits
-        n_cand = int(out["n_cand"].iloc[0])
-        if prune:
-            assert n_cand == want_cand or (want_cand >= k and n_cand >= k)
-        else:
-            assert n_cand == want_cand
+    out = _run(pd.DataFrame(rows), split, k, window=BIG_WINDOW)
+    _assert_matches_reference(rows, out, k, BIG_WINDOW)
 
 
 # few distinct idfs, so terms often share a weight and docs tie exactly
@@ -168,13 +146,11 @@ TIE_IDFS = [0.1, 0.2, 0.3, 0.7, 1.1]
     split=st.integers(0, 8),
 )
 @settings(max_examples=200, deadline=None)
-def test_tied_blocks_at_theta_match_reference(seed, n_terms, k, split):
+def test_tied_docs_match_reference(seed, n_terms, k, split):
     """Every posting has the same tf and dl, so each term gives all its
     docs one equal contribution and docs tie exactly.  Term t's docs lie
-    in [32t, 32t + 64): later terms reach higher doc ids, which win ties,
-    and blocks past the docs seen so far can be skipped.  A block whose
-    bound ties θ holds a doc that belongs in the top k, so skipping it
-    over a rounding difference in the remaining bound shows here."""
+    in [32t, 32t + 64): later terms reach higher doc ids, which win
+    ties, so the top k hinges on the doc_id-descending tie-break."""
     rng = np.random.default_rng(seed)
     tf, dl = int(rng.integers(1, 5)), int(rng.integers(1, 80))
     rows = []
@@ -185,15 +161,7 @@ def test_tied_blocks_at_theta_match_reference(seed, n_terms, k, split):
         qtf = float(rng.integers(1, 3))
         rows.append(_row(t, 5, ids.astype(np.int64), full * tf, full * dl, qtf,
                          float(rng.choice(TIE_IDFS)), WINDOW))
-    want_ids, want_ms, want_cand = _reference_topk(rows, k, window=WINDOW)
-    want_bits = np.array(want_ms, dtype=np.float64).view("int64").tolist()
-    pdf = pd.DataFrame(rows)
-    for prune in (True, False):
-        out = _run(pdf, split if prune else 0, k, prune)
-        assert out["doc_id"].tolist() == want_ids
-        assert out["ms"].to_numpy().view("int64").tolist() == want_bits
-        n_cand = int(out["n_cand"].iloc[0])
-        assert n_cand == want_cand or (prune and want_cand >= k and n_cand >= k)
+    _assert_matches_reference(rows, _run(pd.DataFrame(rows), split, k), k, WINDOW)
 
 
 @given(
@@ -202,10 +170,9 @@ def test_tied_blocks_at_theta_match_reference(seed, n_terms, k, split):
     n_queries=st.integers(2, 5),
     k=st.sampled_from([1, 3, 10, 50]),
     split=st.integers(0, 16),
-    prune=st.booleans(),
 )
 @settings(max_examples=100, deadline=None)
-def test_bucket_queries_share_decode_and_match_solo(seed, n_terms, n_queries, k, split, prune):
+def test_bucket_queries_share_decode_and_match_solo(seed, n_terms, n_queries, k, split):
     """Queries sharing terms in one bucket, over two segments: each
     query's ranks and score bits equal its run alone in a bucket of its
     own, and the shared run decodes every input row exactly once."""
@@ -231,12 +198,12 @@ def test_bucket_queries_share_decode_and_match_solo(seed, n_terms, n_queries, k,
         return unpack(*args)
 
     with mock.patch.object(codec, "unpack_row", counting):
-        out = _run(shared, split, k, prune, plan=[queries])
+        out = _run(shared, split, k, plan=[queries])
     assert len(calls) == len(shared)
 
     for qid, query_id, qconst, terms in queries:
         mine = pdf[pdf["term_id"].isin([t for t, _ in terms])].reset_index(drop=True)
-        solo = _run(mine, 0, k, prune, plan=[[(qid, query_id, qconst, terms)]])
+        solo = _run(mine, 0, k, plan=[[(qid, query_id, qconst, terms)]])
         got = out[out["qid"] == qid].reset_index(drop=True)
         assert got["doc_id"].tolist() == solo["doc_id"].tolist()
         assert got["rank"].tolist() == list(range(1, len(got) + 1))
